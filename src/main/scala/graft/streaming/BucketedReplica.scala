@@ -645,14 +645,19 @@ final class BucketedReplica(
     // has no bucket): skip them deterministically rather than NPE. The
     // streaming path pre-filters these into the DLQ; direct callers (b8,
     // library use) get the same drop-don't-crash contract here.
-    // persisted: the commit is two actions (bucket-id probe, version write)
-    // — the cache stops the second from recomputing the caller's upstream
-    // (for the streaming paths that is a filter/cast/dedup over the source).
+    // persisted: a direct commit is two actions (bucket-id probe, version
+    // write), plus the CHECK and FK probes when any are declared — the
+    // cache stops the later ones from recomputing the caller's upstream
+    // (for the streaming paths that is a filter/cast/dedup over the
+    // source). A caller that passes `precomputedTouched` (IncrementalAgg)
+    // skips the probe.
     // Deliberately NOT a localCheckpoint (the scd2Batch/replaceTouched
     // width treatment): most callers' batches carry no exchange, so
     // persist's frozen width costs nothing here, while a checkpoint adds
-    // one driver job per commit — IncrementalAggSpec pins applyBatch's
-    // control-plane budget at 3 actions and the swap measurably broke it.
+    // one Spark job per commit. Two tests pin the action budgets it would
+    // break: IncrementalAggSpec (applyBatch ≤ 3) and
+    // IncrementalAggSelfHealSpec (a multi-table micro-batch ≤ 3 + 3 per
+    // table).
     val batchRows = batch.select(target.fields.toSeq.map { f =>
       if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
@@ -1252,10 +1257,17 @@ final class BucketedReplica(
     // gcUnreferenced at the next successful commit.
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val versionDir = s"$root/data/v$newV-$attempt"
-    // one task per bucket → exactly one right-sized file per bucket dir
+    // hash-partitioned ON the bucket column, so every bucket lands in
+    // exactly one task → exactly one right-sized file per bucket dir, at
+    // any task count. A task writes several buckets: capping the width at
+    // the cluster's parallelism instead of one task per touched bucket
+    // cuts a small batch's write stage (~30 near-empty tasks, each paying
+    // its own deserialization) to one wave.
     rows.withColumn("bucket", bucketExpr(layoutN))
       .repartition(if (replaceAll) layoutN
-                   else math.min(layoutN, touched.size.max(1)), col("bucket"))
+                   else math.min(touched.size,
+                     rows.sparkSession.sparkContext.defaultParallelism).max(1),
+        col("bucket"))
       .sortWithinPartitions(col("bucket"), col(pk))
       .write.mode("overwrite").partitionBy("bucket").parquet(versionDir)
 

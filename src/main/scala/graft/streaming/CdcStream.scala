@@ -158,8 +158,8 @@ object CdcStream {
     * merge targets are both `pets` and `events`, main.tf:197-215). Events
     * fan out on the envelope's `tbl` column to per-table BucketedReplicas
     * under `replicaRoot/<tbl>`; staging and DLQ stay unified (one changelog,
-    * batch_id-partitioned). The per-table loop is control-plane only
-    * (#tables entries), exactly like the template's per-target merges. */
+    * batch_id-partitioned). The tables commit concurrently
+    * ([[foldTables]]), each into its own replica. */
   def applyToReplicasByTable(changes: DataFrame, replicaRoot: String,
                              stagingDir: String, dlqDir: String,
                              checkpointDir: String,
@@ -168,46 +168,80 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val good = stageAndSplit(batch, batchId, stagingDir, dlqDir,
-          requireTbl = true)
-        val tbls = good.select("tbl").distinct()
-          .collect().map(_.getString(0)).sorted
-        tbls.foreach { t =>
-          val sub = good.filter(col("tbl") === t)
+        foldTables(batch, batchId, replicaRoot, stagingDir, dlqDir) { (t, sub) =>
           new BucketedReplica(s"$replicaRoot/$t")
             .commit(sub, horizonOf(sub, tombstoneRetentionNs),
               tag = Some(batchId))
+          ()
         }
-        // ALL tables committed: publish the consistent frontier. A crash
-        // before this line leaves the batch half-applied and un-markered —
-        // consistent readers stay at the previous frontier until the
-        // foreachBatch retry completes the batch and re-marks it.
-        markApplied(replicaRoot, batchId)
       }
       .start()
 
   /** One micro-batch of the multi-table pipeline WITH a per-table
     * reporting view — the testable core of
     * [[applyToReplicasByTableWithAggViews]]. Each table folds through the
-    * EXACTLY-ONCE batch-id path, which is what makes the cross-table loop
-    * crash-safe without any coordination: a death after table A's fold but
-    * before table B's leaves A fenced (its view pointer records the batch
-    * id) and B un-begun, so the redelivery skips A idempotently and folds
-    * B normally — and a death inside B's own fold self-heals per the
-    * single-table contract. [[markApplied]] stays LAST: the consistent
-    * frontier only advances once every table's replica AND view reflect
-    * the batch. */
+    * EXACTLY-ONCE batch-id path, which is what makes the tables' folds
+    * crash-safe without any coordination, even though they run at the
+    * same time ([[foldTables]]): the tables share no store state, so a
+    * death at any instant leaves each table either fenced (its view
+    * pointer records the batch id, and the redelivery skips it
+    * idempotently), un-begun (folded normally on redelivery), or dead
+    * inside its own fold (self-healed per the single-table contract) —
+    * independently of where the other tables' folds stood. Every fold is
+    * joined before this returns or throws, so no fold of an attempt still
+    * runs when the stream redelivers, and [[markApplied]] stays LAST: the
+    * consistent frontier only advances once every table's replica AND view
+    * reflect the batch. */
   def applyTablesWithAggViews(batch: DataFrame, batchId: Long,
                               replicaRoot: String, aggRoot: String,
-                              stagingDir: String, dlqDir: String): Unit = {
-    val good = stageAndSplit(batch, batchId, stagingDir, dlqDir,
-      requireTbl = true)
-    val tbls = good.select("tbl").distinct()
-      .collect().map(_.getString(0)).sorted
-    tbls.foreach { t =>
-      val sub = good.filter(col("tbl") === t)
+                              stagingDir: String, dlqDir: String): Unit =
+    foldTables(batch, batchId, replicaRoot, stagingDir, dlqDir) { (t, sub) =>
       val rep = new BucketedReplica(s"$replicaRoot/$t")
       new IncrementalAgg(rep, s"$aggRoot/$t").applyBatch(sub, batchId)
+    }
+
+  /** The multi-table fan-out shared by [[applyToReplicasByTable]] and
+    * [[applyTablesWithAggViews]]: stage and route the batch, run `fold` for
+    * every table AT THE SAME TIME (each table owns its replica and view
+    * roots, so the folds share no store state and a narrow write stage of
+    * one leaves cores the other's stages fill), then publish the frontier.
+    *
+    *  - Every fold is joined before this returns or throws: a retry never
+    *    races a fold still running from the failed attempt.
+    *  - [[markApplied]] runs only after every fold succeeded; a crash
+    *    before it leaves the batch un-markered, so consistent readers stay
+    *    at the previous frontier until the retry completes and re-marks it.
+    *  - The first failure is rethrown, the others attached as suppressed.
+    *  - Each call starts fresh threads: a thread inherits the batch
+    *    thread's Spark local properties (job group, streaming query ids,
+    *    scheduler pool) when it is created, which a long-lived pool's
+    *    threads would carry stale. */
+  private def foldTables(batch: DataFrame, batchId: Long, replicaRoot: String,
+                         stagingDir: String, dlqDir: String)
+                        (fold: (String, DataFrame) => Unit): Unit = {
+    val (good, tbls) = stageAndRoute(batch, batchId, stagingDir, dlqDir)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = tbls.map { t =>
+      new Thread(() =>
+        try fold(t, good.filter(col("tbl") === t))
+        catch { case e: Throwable => failures.add(e); () },
+        s"cdc-fold-$batchId-$t")
+    }
+    threads.foreach(_.start())
+    var interrupted: Option[InterruptedException] = None
+    threads.foreach { th =>
+      while (th.isAlive)
+        try th.join()
+        catch { case e: InterruptedException =>
+          // a stopping stream interrupts the batch thread: pass it on to
+          // the folds, but still wait for each before leaving
+          if (interrupted.isEmpty) threads.foreach(_.interrupt())
+          interrupted = interrupted.orElse(Some(e))
+        }
+    }
+    interrupted.orElse(Option(failures.poll())).foreach { e =>
+      failures.forEach(e.addSuppressed(_))
+      throw e
     }
     markApplied(replicaRoot, batchId)
   }
@@ -525,21 +559,33 @@ object CdcStream {
   }
 
   private def stageAndSplit(batch: DataFrame, batchId: Long,
-                            stagingDir: String, dlqDir: String,
-                            requireTbl: Boolean = false): DataFrame = {
+                            stagingDir: String, dlqDir: String): DataFrame = {
     // two-phase: land the raw batch in the staging changelog first
     batch.write.mode("overwrite").parquet(s"$stagingDir/batch_id=$batchId")
-    // D9/A8: unmergeable rows aside, never fail the stream. In the
-    // multi-table fan-out a null table name is unmergeable too — there is no
-    // replica it could belong to — so it dead-letters with the null-key rows
-    // instead of NPE-ing the per-table loop or silently vanishing.
-    val unroutable =
-      if (requireTbl) col("user_id").isNull || col("pos").isNull || col("tbl").isNull
-      else col("user_id").isNull || col("pos").isNull
-    val bad = batch.filter(unroutable)
+    // D9/A8: unmergeable rows aside, never fail the stream
+    val unmergeable = col("user_id").isNull || col("pos").isNull
+    val bad = batch.filter(unmergeable)
     if (!bad.isEmpty)
       bad.write.mode("overwrite").parquet(s"$dlqDir/batch_id=$batchId")
-    batch.filter(!unroutable)
+    batch.filter(!unmergeable)
+  }
+
+  /** [[stageAndSplit]] for the multi-table fan-out: also returns the sorted
+    * names of the tables the routable rows belong to. A null table name is
+    * unmergeable too — there is no replica it could belong to — so it
+    * dead-letters with the null-key rows instead of NPE-ing the per-table
+    * fan-out or silently vanishing. ONE Spark action routes the batch: a
+    * distinct over the table name with every unroutable row mapped to the
+    * null name, so the DLQ is written only when that group exists. */
+  private def stageAndRoute(batch: DataFrame, batchId: Long, stagingDir: String,
+                            dlqDir: String): (DataFrame, Seq[String]) = {
+    batch.write.mode("overwrite").parquet(s"$stagingDir/batch_id=$batchId")
+    val unroutable = col("user_id").isNull || col("pos").isNull || col("tbl").isNull
+    val routes = batch.select(when(!unroutable, col("tbl")).as("tbl")).distinct()
+      .collect().map(r => Option(r.getString(0)))
+    if (routes.contains(None))
+      batch.filter(unroutable).write.mode("overwrite").parquet(s"$dlqDir/batch_id=$batchId")
+    (batch.filter(!unroutable), routes.flatten.toSeq.sorted)
   }
 
   private def horizonOf(good: DataFrame,

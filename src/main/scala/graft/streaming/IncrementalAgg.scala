@@ -10,13 +10,17 @@ import org.apache.spark.sql.types._
   * rescanning the table it reports on.
   *
   * Maintains `agg(group) = (n_live, sum_value)` over `rep.live`. Each
-  * [[applyBatch]] diffs the replica state of ONLY the batch's keys around
-  * the replica commit it performs:
+  * [[applyBatch]] diffs the replica state of ONLY the buckets the batch's
+  * keys hash into around the replica commit it performs:
   *
-  *  1. old = live rows of batch keys (bucket-pruned [[BucketedReplica.readTouched]])
+  *  1. old = live rows of the touched buckets (the same pinned scan the
+  *     commit merges from)
   *  2. `rep.commit(batch)` (latest-wins, tombstone-aware — all ordering
   *     corner cases live there, not here)
-  *  3. new = live rows of batch keys
+  *  3. new = live rows of the touched buckets at the version the commit
+  *     published. Rows of keys NOT in the batch that share a touched
+  *     bucket are rewritten unchanged, so they are identical in old and
+  *     new and cancel per group: the diff needs no key set.
   *  4. delta = new − old per group; store ← (store ∪ delta) summed,
   *     zero-count groups dropped.
   *
@@ -53,7 +57,6 @@ final class IncrementalAgg(
     root: String,
     groupCol: String = "event_type",
     valueCol: String = "value",
-    pk: String = "user_id",
     opCol: String = "op") {
 
   private val storeSchema = StructType(Seq(
@@ -159,7 +162,6 @@ final class IncrementalAgg(
 
   private def applyBatchCached(batch: DataFrame, batchIdOpt: Option[Long]): Unit = {
     val spark = batch.sparkSession
-    val keys = batch.filter(col(pk).isNotNull).select(col(pk)).distinct()
     // ONE bucket probe per micro-batch, shared by the before-read, the
     // replica commit, and the after-read (each used to rerun the identical
     // collect — 3 driver actions where 1 suffices; at high trigger rates
@@ -186,21 +188,16 @@ final class IncrementalAgg(
     // snapPin) — slower, never wrong.
     val stored = rep.readBucketsAt(spark, touched, snap).persist()
     try {
-      // group/value projection of live rows (shared by the keyed diff and
-      // the crash-gap repair's unrestricted bucket diff)
+      // group/value projection of live rows (shared by the touched-bucket
+      // diff and the crash-gap repair's)
       def groupedOf(rows: DataFrame): DataFrame =
         rows.filter(col(opCol) =!= "DELETE")
           .select(col(groupCol), col(valueCol).cast(DecimalType(18, 2)).as("__v"))
-      // live state of the batch's keys; keys ≤ batch size, bounded per
-      // micro-batch → broadcast the semi-join probe, never shuffle the buckets
-      def keyedOf(rows: DataFrame): DataFrame =
-        groupedOf(rows.join(broadcast(keys), Seq(pk), "left_semi"))
       def asDelta(before: DataFrame, after: DataFrame): DataFrame =
         before.select(col(groupCol), lit(-1L).as("__dn"),
             (-col("__v")).as("__ds"))
           .union(after.select(col(groupCol), lit(1L).as("__dn"),
             col("__v").as("__ds")))
-      val before = keyedOf(stored)
       beforeReplicaCommit()
       // the commit RETURNS the snapshot it published; the after-read reads
       // AT that version, not the current head — a foreign applyBatch
@@ -241,8 +238,14 @@ final class IncrementalAgg(
         val delta = priorCrashed match {
           case Some((v1, tok1)) =>
             metered("gap_repair")(lostDelta(spark, v1, tok1, groupedOf, asDelta))
+          // the WHOLE touched buckets, not just the batch's keys: rows of
+          // other keys co-resident in a touched bucket are rewritten
+          // unchanged by the commit, so they appear identically on both
+          // sides and cancel per group (lostDelta's argument) — no key set,
+          // no semi-join, no extra job
           case None =>
-            asDelta(before, keyedOf(rep.readBucketsAt(spark, touched, published)))
+            asDelta(groupedOf(stored),
+              groupedOf(rep.readBucketsAt(spark, touched, published)))
         }
         // pin the VIEW head this fold folds into, and publish as exactly
         // pinned+1: a foreign maintainer's view write landing inside the

@@ -54,6 +54,34 @@ class BucketedReplicaSpec extends SparkSpecBase {
     assert(gotAll === expected)
   }
 
+  test("a batch touching more buckets than the parallelism still writes " +
+    "exactly one file per bucket") {
+    val root = tmpDir("bkr_width") + "/rep"
+    val rep = new BucketedReplica(root) // 32 buckets
+    val seed = mkBatch((0L until 200L).map(k => row("INSERT", k, k, k, k.toDouble)))
+    // updates, deletes and new keys spread over most of the buckets
+    val batch = mkBatch((0L until 260L by 3).map { k =>
+      if (k >= 200L) row("INSERT", 1000L + k, 1000L + k, k, k.toDouble)
+      else if (k % 2 == 0) row("UPDATE", 1000L + k, 1000L + k, k, -k.toDouble)
+      else row("DELETE", 1000L + k, 1000L + k, k, 0.0)
+    })
+    rep.commit(seed)
+    rep.commit(batch)
+    val dirs = Option(versionDataDir(root, 2L).listFiles()).get
+      .filter(_.getName.startsWith("bucket="))
+    assert(dirs.length > spark.sparkContext.defaultParallelism,
+      s"the batch must touch more buckets than the write has tasks, got ${dirs.length}")
+    dirs.foreach { d =>
+      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files === 1, s"${d.getName} holds $files parquet files")
+    }
+    def rowsOf(df: DataFrame): Seq[String] =
+      df.select(CdcStream.envelopeSchema.fieldNames.map(col).toSeq: _*)
+        .collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(rep.live(spark)) ===
+      rowsOf(Cdc.merge(seed.unionByName(batch), Seq("user_id"))))
+  }
+
   test("a durable GC pin keeps the pinned version's files across foreign " +
     "commits; unpin (or expiry) releases them") {
     val root = tmpDir("bkr_pin") + "/rep"

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.streaming.{BucketedReplica, CdcStream, IncrementalAgg, StoreIO}
+import scala.jdk.CollectionConverters._
 
 /** The exactly-once batch-id fold ([[IncrementalAgg.applyBatch]] with a
   * batchId) and its crash-gap self-heal — the round-13 upgrade of the one
@@ -152,11 +153,22 @@ class IncrementalAggSelfHealSpec extends SparkSpecBase {
     val b2m = Seq(("UPDATE", "events", 3L, 10L, 6.0, "a"),
       ("INSERT", "events", 4L, 11L, 2.5, "b"),
       ("INSERT", "pets", 5L, 21L, 1.0, "y"),
-      ("DELETE", "pets", 6L, 20L, 0.0, "x"))
+      ("DELETE", "pets", 6L, 20L, 0.0, "x"),
+      ("INSERT", null, 7L, 12L, 9.0, "z")) // unroutable: dead-lettered
+    // the folds run on threads of their own: none may outlive its delivery
+    // (returned or thrown), or it could still be writing while the
+    // redelivery runs. Recorded, and asserted after each step, so the
+    // sweep's catch-all cannot mistake a violation for the injected crash.
+    val outlived = scala.collection.mutable.Buffer.empty[String]
     def deliver(parent: String, b: Seq[(String, String, Long, Long, Double, String)],
                 id: Long): Unit =
-      CdcStream.applyTablesWithAggViews(env2(b), id, s"$parent/replicas",
+      try CdcStream.applyTablesWithAggViews(env2(b), id, s"$parent/replicas",
         s"$parent/aggs", s"$parent/staging", s"$parent/dlq")
+      finally outlived ++= Thread.getAllStackTraces.keySet.asScala
+        .filter(th => th.isAlive && th.getName.startsWith("cdc-fold-"))
+        .map(_.getName)
+    def noFoldOutlived(step: String): Unit =
+      assert(outlived.isEmpty, s"$step: folds outlived a delivery: $outlived")
     def stateOf(parent: String): Seq[String] =
       Seq("events", "pets").flatMap { t =>
         val rep = new BucketedReplica(s"$parent/replicas/$t")
@@ -166,9 +178,16 @@ class IncrementalAggSelfHealSpec extends SparkSpecBase {
           agg.read(spark).collect().map(r => s"$t|V|$r").toSeq
       }.sorted :+
         s"frontier=${CdcStream.appliedFrontier(s"$parent/replicas")}"
-    // control: never-crashed
+    // control: never-crashed; its second delivery pins the action budget:
+    // one staging write, ONE routing action, the dead-letter write, and
+    // each table's 3-action fold
     val ctl = tmpDir("mtbl_ctl")
-    deliver(ctl, b1m, 0L); deliver(ctl, b2m, 1L)
+    deliver(ctl, b1m, 0L)
+    val n = countActions(deliver(ctl, b2m, 1L))
+    assert(n <= 3 + 3 * 2, s"a 2-table micro-batch ran $n Spark actions — " +
+      "expected at most 3 + 3 per table")
+    assert(spark.read.parquet(s"$ctl/dlq/batch_id=1").count() === 1L)
+    noFoldOutlived("control")
     val want = stateOf(ctl)
     // crash at strided mutation points across BOTH tables' folds and the
     // frontier marker, redeliver, and require exact convergence each time
@@ -183,6 +202,7 @@ class IncrementalAggSelfHealSpec extends SparkSpecBase {
       try deliver(p, b2m, 1L)
       catch { case _: Throwable => crashed = true }
       val (fired, _) = StoreIO.Faults.disarm()
+      noFoldOutlived(s"k=$k")
       if (!crashed) { assert(!fired); sweeping = false }
       else {
         assert(fired, s"real failure at k=$k")
@@ -194,12 +214,30 @@ class IncrementalAggSelfHealSpec extends SparkSpecBase {
           assert(stateOf(p) === want,
             s"k=$k: frontier claims applied but a table lags")
         deliver(p, b2m, 1L) // the redelivery
+        noFoldOutlived(s"k=$k redelivery")
         assert(stateOf(p) === want, s"k=$k: redelivery diverged")
       }
       k += 3 // stride: per-table fold internals are already swept exhaustively
     }
     assert(points >= 8, s"multi-table sweep covered only $points points")
     info(s"multi-table loop: $points strided crash points, all converged")
+    // one table's fold dies while the other's runs to completion: the
+    // frontier must not claim the batch, and the redelivery converges
+    Seq(1, 7).foreach { k =>
+      val p = tmpDir(s"mtbl_one_k$k")
+      deliver(p, b1m, 0L)
+      StoreIO.Faults.armAt(s"$p/replicas/events", k)
+      val crashed = try { deliver(p, b2m, 1L); false }
+        catch { case _: Throwable => true }
+      val (fired, _) = StoreIO.Faults.disarm()
+      noFoldOutlived(s"events-only k=$k")
+      assert(fired && crashed, s"events-only crash at k=$k did not fire")
+      assert(!new java.io.File(s"$p/replicas/_APPLIED-1").exists(),
+        s"k=$k: a batch with a failed table fold was marked applied")
+      deliver(p, b2m, 1L)
+      noFoldOutlived(s"events-only k=$k redelivery")
+      assert(stateOf(p) === want, s"events-only k=$k: redelivery diverged")
+    }
   }
 
   test("the streaming wiring passes the micro-batch id end-to-end " +

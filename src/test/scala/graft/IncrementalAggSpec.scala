@@ -94,29 +94,7 @@ class IncrementalAggSpec extends SparkSpecBase {
     val ch = Cdc.changelog(spark, sfDir).filter(col("user_id") < 40).persist()
     try {
       agg.applyBatch(ch.filter(col("pos") % 2 === 0)) // warm: store + replica exist
-      // count ACTIONS (collect/write executions), not raw scheduler jobs:
-      // AQE materializes broadcast/shuffle stages as extra sub-jobs, which
-      // are data-plane detail — the streaming scalability tax is the number
-      // of blocking driver round-trips per micro-batch
-      val actions = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = { actions.incrementAndGet(); () }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      }
-      spark.listenerManager.register(l)
-      val n = try {
-        agg.applyBatch(ch.filter(col("pos") % 2 === 1))
-        // listener events are async: poll until the count is stable
-        var prev = -1; var cur = actions.get(); var spins = 0
-        while (cur != prev && spins < 50) {
-          prev = cur; Thread.sleep(100); cur = actions.get(); spins += 1
-        }
-        cur
-      } finally spark.listenerManager.unregister(l)
+      val n = countActions(agg.applyBatch(ch.filter(col("pos") % 2 === 1)))
       // exactly: 1 bucket probe (SHARED by before-read, commit, after-read —
       // each used to run its own identical collect, 5 actions total) + the
       // commit's version write + the view write

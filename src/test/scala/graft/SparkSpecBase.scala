@@ -12,6 +12,33 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** The Spark actions `body` runs — QueryExecutionListener successes
+    * (collects, writes), not raw scheduler jobs: AQE materializes
+    * broadcast/shuffle stages as extra sub-jobs, which are data-plane
+    * detail, while the streaming scalability tax is the number of blocking
+    * round-trips per micro-batch. */
+  def countActions(body: => Unit): Int = {
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = { actions.incrementAndGet(); () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      // listener events are async: poll until the count is stable
+      var prev = -1; var cur = actions.get(); var spins = 0
+      while (cur != prev && spins < 50) {
+        prev = cur; Thread.sleep(100); cur = actions.get(); spins += 1
+      }
+      cur
+    } finally spark.listenerManager.unregister(l)
+  }
+
   /** The committed data directory of replica version v. Data dirs are
     * attempt-suffixed (`data/v<v>-<attempt>`) since the multi-writer
     * hardening; once v is committed, exactly one referenced dir survives
