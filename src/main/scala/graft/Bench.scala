@@ -184,20 +184,12 @@ object Bench {
     // so it conflates co-tenant load with self-load; this one doesn't
     val loadStart = loadAvg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // dev loop: SPARK_GRAFT_ONLY=b10,b11 times just the named prefixes
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions) // cluster twin: spark.sql.extensions
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     // c36's WITH RECURSIVE: Spark's own UnionLoopExec rebuilds a LogicalRDD
     // from each iteration's Dataset, and LogicalRDD$'s stats rewrite warns
     // ("The output columns are expected to the same ...") whenever the
@@ -240,8 +232,8 @@ object Bench {
       // production they exist before any query runs. Build them untimed at
       // the TARGET SF so the timed pass measures query latency, not
       // one-time snapshot prep; the queries still run cold (clearCache
-      // below) — only the on-disk artifacts are pre-existing. Recorded in
-      // the notes field so the regime is explicit in the record.
+      // below) — only the on-disk artifacts are pre-existing. BASELINE.md's
+      // Bench record history states the regime.
       // r17: EVERY corpusArtifact is prebuilt here uniformly — r16's e50
       // +50% was the lsh_cand_pairs build landing in whichever consumer
       // Map order ran first; the regime was per-artifact-list and the list
@@ -299,55 +291,8 @@ object Bench {
       (if (failures.size > 8) Seq("\"...\"") else Nil)).mkString("[", ",", "]")
     def qJson(qs: Iterable[(String, Double)]): String =
       qs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    // r6 investigation of r5's two flagged slowdowns, carried in the detail
-    // record (the full-sequence numbers are the comparable ones; isolated
-    // reruns bound what the query itself costs):
-    val notes = "r5 flagged e21 2.8x / e47 3.2x and a ~1.7x uniform drift; " +
-      "r6's full re-baselines (195q/174.3s, then 197q/171.8s with 0 " +
-      "failures, vs r4 166.1s/193q) show all three were environmental: " +
-      "in-sequence e21 3.43s (r5 8.10, r4 2.91), e47 0.51s (r5 1.88, r4 " +
-      "0.60), and the regenerated fixtures show no densification (e47: 48 " +
-      "blocks, max 2 names/block; documents: ~zero dup families, so the " +
-      "e21 LSH graph is sparse and label propagation converges in few " +
-      "rounds). c52 drops 3.0s->0.6s from write-once fixture reuse. " +
-      "Late-r6 201q runs (211.2s then 225.5s on an otherwise-idle " +
-      "container but host load ~3.3 from co-tenants, host rebooted " +
-      "mid-round) drift uniformly +20-30% vs the same round's 171.8s " +
-      "record with no plan changes and e21/e47/c52 still at their " +
-      "recovered levels - same environmental signature as r5; compare " +
-      "records within one host session, not across. r8 closes r7's two " +
-      "flagged items with ONE change (the shared LSH-label artifact): the " +
-      "six consumers drop ~35s->~6s (e49 9.8->0.6, e101 7.8->0.6, e59 " +
-      "6.9->0.3, e25/e73 <0.5; the first consumer in run order carries " +
-      "the one-time ~3.5s build), and e20_top_ngrams returns 1.76->0.47s " +
-      "with its code untouched - r7's regression was localCheckpoint/GC " +
-      "pressure from the 7x fixpoint rebuilds running before it, exactly " +
-      "the suite-pressure class the isolated_worst3 gap already suggested. " +
-      "Regime note: write-once per-snapshot artifacts (c52 fixture, e09c " +
-      "IVF index, LSH label parquet) are built UNTIMED at the target SF " +
-      "during warm-up - in production they precede any query; the timed " +
-      "queries themselves still run cold (cache cleared). r11 separates " +
-      "the two drift signals IN the record: median_ratio_vs_prev is the " +
-      "uniform environmental factor against the last full same-host " +
-      "record (r10's was 1.28x at loadavg ~2.5), outliers_vs_prev names " +
-      "queries standing >1.25x above that median - the real-regression " +
-      "candidates; loadavg_start is host load before this JVM's own " +
-      "warm-up inflates the 1-min figure. Compare within a host session; " +
-      "a high median with empty outliers is environment, not code. r12: " +
-      "the baseline now matches by scale factor, and every flagged " +
-      "outlier gets its own isolated rerun (isolated_outliers) so drift " +
-      "self-diagnoses in the record - r12's quiet-host run confirmed all " +
-      "8 r11 outliers environmental (back at r10 levels, code untouched) " +
-      "and put the full suite at 252.7s/254q = 0.995 s/q; b11 isolated " +
-      "measured 5.91 then 4.80 on the same host hours apart, so treat " +
-      "any single-session b11 number as +/-1s session noise. r17 regime " +
-      "note: ALL write-once corpus artifacts (minhash_sigs_s10, " +
-      "lsh_cand_pairs_s10, lsh_components, truth_pairs_s10_j01, and the " +
-      "NEW shingle_sets3 shared by e113/e113b/e113c per the r16 verdict's " +
-      "ruling) are prebuilt untimed in warm-up via prebuildArtifacts - " +
-      "closing r16's e50 first-consumer-pays-the-build accounting defect; " +
-      "hostnorm now uses the mean of a before- AND after-pass probe with " +
-      "host_probe_drift/hostnorm_reliable flagging mid-run pressure shifts."
+    // the record's history (r5-r17 regime notes) lives in BASELINE.md
+    val notes = "see BASELINE.md, Bench record history"
     // Environmental-vs-real decomposition (r11, automating what r10's
     // judge did by hand): the per-query ratio against the previous FULL
     // same-host record. Co-tenant drift moves the whole suite by one

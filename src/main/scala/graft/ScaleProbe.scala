@@ -61,9 +61,13 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
 
   /** Write-once N× corpus under the system tmpdir (same reuse discipline as
-    * the bench fixtures: the probe measures queries, not fixture writes). */
-  private def synthDir(spark: SparkSession, baseDir: String, scale: Int): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_scale/x$scale"
+    * the bench fixtures: the probe measures queries, not fixture writes),
+    * keyed by the base corpus as well as the scale: two base dirs at one
+    * scale are two corpora. */
+  private[graft] def synthDir(spark: SparkSession, baseDir: String, scale: Int): String = {
+    val base = new java.io.File(baseDir).getCanonicalFile
+    val key = f"${base.getName}-${base.getPath.hashCode}%08x"
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_scale/$key/x$scale"
     val done = new java.io.File(root, "_DONE")
     if (!done.exists()) {
       replicateDocs(Tables.load(spark, baseDir, "documents"), scale)
@@ -133,14 +137,11 @@ object ScaleProbe {
       }
       ()
     }
-    def snap(): (Long, Long, Long) = (input.get, shufR.get, shufW.get)
-    /** Listener events are async: poll until the three counters are stable. */
-    def stable(): (Long, Long, Long) = {
-      var prev = (-1L, -1L, -1L); var cur = snap(); var spins = 0
-      while (cur != prev && spins < 50) {
-        prev = cur; Thread.sleep(100); cur = snap(); spins += 1
-      }
-      cur
+    /** The totals of every job finished so far: listener events are
+      * delivered asynchronously, so drain the bus before reading. */
+    def snap(sc: org.apache.spark.SparkContext): (Long, Long, Long) = {
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+      (input.get, shufR.get, shufW.get)
     }
   }
 
@@ -153,16 +154,8 @@ object ScaleProbe {
     // the (by-design quadratic) e48 sizing triple at 100×
     val onlyQ = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     def sel(n: String): Boolean = onlyQ.forall(_.exists(n.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.localSession(cpus)
     val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "e03b_lsh_pair_join" -> SparkEntry.queries("e03b_lsh_pair_join"),
       "e21_dedup_components" -> SparkEntry.queries("e21_dedup_components"),
@@ -235,7 +228,7 @@ object ScaleProbe {
     scales.foreach { sc =>
       val d = dirs(sc)
       (queries ++ variants(sc)).filter(q => sel(q._1)).foreach { case (name, fn) =>
-        val b0 = bytes.stable()
+        val b0 = bytes.snap(spark.sparkContext)
         val t0 = System.nanoTime()
         // `_pairs`/`_count` probes are 1-row counters whose VALUE is the
         // measurement (candidate volume per scale step); collect it —
@@ -245,7 +238,7 @@ object ScaleProbe {
             Some(fn(spark, d).head().getLong(0))
           else { fn(spark, d).write.format("noop").mode("overwrite").save(); None }
         val sec = (System.nanoTime() - t0) / 1e9
-        val b1 = bytes.stable()
+        val b1 = bytes.snap(spark.sparkContext)
         spark.catalog.clearCache(); System.gc()
         def mb(v: Long) = math.rint(v / 1e4) / 100 // MB, 2dp
         val extra = counter.map(v => s""","value":$v""").getOrElse("")

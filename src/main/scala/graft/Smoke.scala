@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev smoke: runs SparkEntry.entry exactly as the driver would. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(4)
     val df = SparkEntry.entry(spark)
     println(s"entry rows=${df.count()}")
     df.show(10, truncate = false)

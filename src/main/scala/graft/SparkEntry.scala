@@ -8,6 +8,23 @@ import org.apache.spark.sql.types._
   *   Relational (SURVEY §2 C), Cdc (§2 A/B), StreamingOps batch twins (§2 D),
   *   Extensions (§2 E: dedup, similarity, text analysis, multimodal). */
 object SparkEntry {
+  /** The local session every graft main and spec runs in: `local[cores]`
+    * with one shuffle partition per core, UTC, parquet nanos read as Long
+    * (events.ts), no UI, and the graft planner extensions (on a cluster:
+    * `spark.sql.extensions`). */
+  def localSession(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Shape: C6 join + C11 agg — revenue per returnflag over lineitem⋈orders. */
   def entry(spark: SparkSession): DataFrame = {

@@ -96,24 +96,3 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }
-
-/** One-off schema/read probe used during development. */
-object Probe {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
-      val df = Tables.load(spark, dir, n)
-      println(s"== $n rows=${df.count()}")
-      df.printSchema()
-      df.show(3, truncate = 40)
-    }
-    spark.stop()
-  }
-}

@@ -56,16 +56,8 @@ object Verify {
     val only: String => Boolean = if (args.length > 2) {
       val ps = args(2).split(",").toSeq; n => ps.exists(n.startsWith)
     } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions) // cluster twin: spark.sql.extensions
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkEntry.localSession(cpus)
     run(spark, sfDir, outDir, SparkEntry.queries.filter(kv => only(kv._1)))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -607,7 +607,7 @@ final class BucketedReplica(
     // ONE control-plane snapshot per commit: pointer, manifest text, and
     // schema are resolved once and threaded through bucket-merge AND
     // publish, instead of the pre-r11 shape (4 independent headSnapshots +
-    // 3 manifest reads per commit — measured by CommitProbe). Besides the
+    // 3 manifest reads per commit, counted by StoreIO.Stats). Besides the
     // round trips, a single snapshot closes a consistency seam: the old
     // publish re-snapshotted after the merge plan was built against the
     // earlier snapshot's manifest, so a foreign commit landing in between

@@ -89,13 +89,19 @@ object CdcStream {
                      dlqDir: String, checkpointDir: String,
                      tombstoneRetentionNs: Option[Long] = None,
                      evolveSchema: Boolean = false): StreamingQuery =
+    availableNow(changes, checkpointDir) { (batch, batchId) =>
+      applyBatch(batch, batchId, replicaDir, stagingDir, dlqDir,
+        tombstoneRetentionNs, evolveSchema)
+    }
+
+  /** Drain everything `changes` has now through `batchFn`, one
+    * foreachBatch micro-batch at a time, checkpointed at `checkpointDir`. */
+  private def availableNow(changes: DataFrame, checkpointDir: String)
+                          (batchFn: (DataFrame, Long) => Unit): StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, replicaDir, stagingDir, dlqDir,
-          tombstoneRetentionNs, evolveSchema)
-      }
+      .foreachBatch(batchFn)
       .start()
 
   /** One micro-batch of the D8 merge, idempotent under foreachBatch retries
@@ -141,16 +147,12 @@ object CdcStream {
   def applyToReplicaWithAggView(changes: DataFrame, replicaDir: String,
                                 aggDir: String, stagingDir: String,
                                 dlqDir: String, checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val good = stageAndSplit(batch, batchId, stagingDir, dlqDir)
-        val rep = new BucketedReplica(replicaDir)
-        // commits the replica, tagged with the stream's monotone batch id
-        new IncrementalAgg(rep, aggDir).applyBatch(good, batchId)
-      }
-      .start()
+    availableNow(changes, checkpointDir) { (batch, batchId) =>
+      val good = stageAndSplit(batch, batchId, stagingDir, dlqDir)
+      val rep = new BucketedReplica(replicaDir)
+      // commits the replica, tagged with the stream's monotone batch id
+      new IncrementalAgg(rep, aggDir).applyBatch(good, batchId)
+    }
 
   /** D8, multi-table form — the shape the reference's merge job actually
     * has: the Cloud_Datastream_to_BigQuery template folds EVERY source
@@ -164,18 +166,14 @@ object CdcStream {
                              stagingDir: String, dlqDir: String,
                              checkpointDir: String,
                              tombstoneRetentionNs: Option[Long] = None): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldTables(batch, batchId, replicaRoot, stagingDir, dlqDir) { (t, sub) =>
-          new BucketedReplica(s"$replicaRoot/$t")
-            .commit(sub, horizonOf(sub, tombstoneRetentionNs),
-              tag = Some(batchId))
-          ()
-        }
+    availableNow(changes, checkpointDir) { (batch, batchId) =>
+      foldTables(batch, batchId, replicaRoot, stagingDir, dlqDir) { (t, sub) =>
+        new BucketedReplica(s"$replicaRoot/$t")
+          .commit(sub, horizonOf(sub, tombstoneRetentionNs),
+            tag = Some(batchId))
+        ()
       }
-      .start()
+    }
 
   /** One micro-batch of the multi-table pipeline WITH a per-table
     * reporting view — the testable core of
@@ -255,14 +253,10 @@ object CdcStream {
                                          replicaRoot: String, aggRoot: String,
                                          stagingDir: String, dlqDir: String,
                                          checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTablesWithAggViews(batch, batchId, replicaRoot, aggRoot,
-          stagingDir, dlqDir)
-      }
-      .start()
+    availableNow(changes, checkpointDir) { (batch, batchId) =>
+      applyTablesWithAggViews(batch, batchId, replicaRoot, aggRoot,
+        stagingDir, dlqDir)
+    }
 
   /** Read one table's replica from a multi-table root. */
   def liveReplicaFor(spark: SparkSession, replicaRoot: String,
@@ -427,13 +421,9 @@ object CdcStream {
     * delivered so far. */
   def applyScd2History(changes: DataFrame, replicaDir: String,
                        historyDir: String, checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scd2Batch(batch, batchId, replicaDir, historyDir)
-      }
-      .start()
+    availableNow(changes, checkpointDir) { (batch, batchId) =>
+      scd2Batch(batch, batchId, replicaDir, historyDir)
+    }
 
   /** One SCD2 micro-batch: window the batch together with each touched
     * key's stored open row; newly-closed intervals append, open rows
@@ -479,8 +469,8 @@ object CdcStream {
       // intervals feed the history append, and the open rows (lead null)
       // ARE the latest-wins content of the touched buckets — so the
       // replica commit publishes them directly (commitMerged) instead of
-      // re-running the union+merge window a second time, which the r11
-      // CommitProbe breakdown showed was most of the commit phase's wall.
+      // re-running the union+merge window a second time, which r11
+      // measured as most of the commit phase's wall.
       val touched = rep.touchedBuckets(good)
       // ONE pinned snapshot covers the open-row read AND the commit: the
       // publish below serializes against the version these rows were read

@@ -166,7 +166,7 @@ final class IncrementalAgg(
     // replica commit, and the after-read (each used to rerun the identical
     // collect — 3 driver actions where 1 suffices; at high trigger rates
     // per-batch actions are the streaming path's scalability tax)
-    val touched = metered("touched_probe")(rep.touchedBuckets(batch))
+    val touched = rep.touchedBuckets(batch)
     // ONE pinned snapshot anchors the before-read AND the commit: the
     // delta below is before/after state arithmetic, so a foreign commit
     // slipping between the two would have its effect on the batch's keys
@@ -205,9 +205,8 @@ final class IncrementalAgg(
       // would otherwise be absorbed into this batch's delta and counted
       // AGAIN when the foreign fold's own delta lands (the post-commit
       // twin of the pre-commit seam `snapAt` closes)
-      val published = metered("replica_commit")(
-        rep.commit(batch, precomputedTouched = Some(touched), snapAt = Some(snap),
-          storedIn = Some(stored), tag = batchIdOpt))
+      val published = rep.commit(batch, precomputedTouched = Some(touched),
+        snapAt = Some(snap), storedIn = Some(stored), tag = batchIdOpt)
       val pubPin = rep.pinFiles(published) // same GC protection, after-read
       try {
         afterReplicaCommit()
@@ -237,7 +236,7 @@ final class IncrementalAgg(
         }
         val delta = priorCrashed match {
           case Some((v1, tok1)) =>
-            metered("gap_repair")(lostDelta(spark, v1, tok1, groupedOf, asDelta))
+            lostDelta(spark, v1, tok1, groupedOf, asDelta)
           // the WHOLE touched buckets, not just the batch's keys: rows of
           // other keys co-resident in a touched bucket are rewritten
           // unchanged by the commit, so they appear identically on both
@@ -296,7 +295,7 @@ final class IncrementalAgg(
               .agg(sum(col("__dn")).as("n_live"),
                 sum(col("__ds")).cast(DecimalType(18, 2)).as("sum_value"))
               .filter(col("n_live") =!= 0L)
-            metered("view_fold")(write(next, viewPin, newMaxb))
+            write(next, viewPin, newMaxb)
             done = true
           } catch { case e @ (_: StoreIO.ConcurrentCommit |
                               _: org.apache.spark.SparkException |
@@ -331,18 +330,6 @@ final class IncrementalAgg(
     * window of the freed-name validation (PointerReuseSpec). No-op in
     * production. */
   private[graft] var beforeViewPointerCommit: () => Unit = () => ()
-
-  /** Dev metering hook (CommitProbe's b13 phase table): invoked with
-    * (phase, wallSeconds) after each internal phase of a fold. No-op in
-    * production. */
-  private[graft] var phaseMeter: (String, Double) => Unit = (_, _) => ()
-
-  private def metered[A](phase: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    phaseMeter(phase, (System.nanoTime() - t0) / 1e9)
-    r
-  }
 
   private def write(next: DataFrame, basedOn: Option[(Long, String, Long)],
                     maxb: Long): Unit = {

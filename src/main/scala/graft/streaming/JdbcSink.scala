@@ -101,10 +101,12 @@ class JdbcSink(url: String, table: String, pk: String = "user_id",
     * swallowed iff a re-check confirms the table now exists, which is the
     * create-if-absent outcome both writers wanted. */
   /** Once this instance has provisioned (or confirmed) the three tables,
-    * later batches skip the metadata probes — 1 connection + 4 round
-    * trips per micro-batch on a steady stream (CommitProbe-measured). An
-    * out-of-band DROP after that surfaces loudly at the next stage/promote
-    * statement, same failure the probes would have deferred to anyway. */
+    * later batches skip the metadata probes — 2 connections + 7
+    * statements per micro-batch on a steady stream (the ledger check,
+    * then the promote; the staging append's own JDBC writer comes on
+    * top), pinned by JdbcSinkSpec. An out-of-band DROP after that
+    * surfaces loudly at the next stage/promote statement, same failure
+    * the probes would have deferred to anyway. */
   @volatile private var provisioned = false
 
   def ensureTables(schema: StructType): Unit = {
@@ -363,8 +365,7 @@ class JdbcSink(url: String, table: String, pk: String = "user_id",
 
 object JdbcSink {
   /** JDBC round-trip counters (connections opened, statements/metadata
-    * probes executed) — the warehouse-side half of the CommitProbe
-    * per-commit cost breakdown. */
+    * probes executed) — the warehouse-side twin of [[StoreIO.Stats]]. */
   object Stats {
     import java.util.concurrent.atomic.LongAdder
     val conns = new LongAdder; val stmts = new LongAdder

@@ -278,10 +278,11 @@ object StoreIO {
     sys.props.get("graft.store.ptrGraceMs").flatMap(_.toLongOption)
       .getOrElse(30L * 60 * 1000)
 
-  /** Process-wide control-plane op counters — the round-trip meter behind
-    * the CommitProbe cost breakdown (every pointer/manifest/meta access in
-    * the process funnels through these primitives; LongAdder increments
-    * are contention-free noise next to any FS call). On a cluster each op
+  /** Process-wide control-plane op counters — the round-trip meter the
+    * traced benchmark (perfbench `--trace 1`) reports per tail batch
+    * (every pointer/manifest/meta access in the process funnels through
+    * these primitives; LongAdder increments are contention-free noise
+    * next to any FS call). On a cluster each op
     * is a namenode/object-store round trip, so the per-commit counts here
     * ARE the control-plane latency model. */
   object Stats {
@@ -680,7 +681,7 @@ final class OpLog(io: StoreIO) {
   // stream that calls state() each micro-batch that is O(batches) total
   // round trips over its life instead of O(batches²) — the same
   // repeated-head-read waste class the replica's one-snapshot commit
-  // removed, now measured by CommitProbe's index-store section. A direct
+  // removed; StoreTrendSpec pins the flat per-batch count. A direct
   // read(v) of a truncated version serves the cached (subsumed) content
   // instead of an IOException — benign: versions() never lists it.
   private val entryCache =

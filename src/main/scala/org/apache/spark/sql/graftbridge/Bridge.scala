@@ -32,4 +32,10 @@ object Bridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Block until every listener event posted so far has been delivered
+    * (`SparkContext.listenerBus` is `private[spark]`): task-metric
+    * listeners then hold the totals of every finished job. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

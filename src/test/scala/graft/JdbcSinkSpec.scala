@@ -40,6 +40,15 @@ class JdbcSinkSpec extends SparkSpecBase {
       .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("pos"),
         r.getAs[Double]("value"), r.getAs[String]("event_type"))).toSet
 
+  /** Runs one applyBatch; returns its result and the (connections,
+    * statements) it cost the warehouse, from [[JdbcSink.Stats]]. */
+  private def roundTrips(apply: => Boolean): (Boolean, (Long, Long)) = {
+    val s0 = JdbcSink.Stats.snapshot()
+    val applied = apply
+    val s1 = JdbcSink.Stats.snapshot()
+    (applied, (s1("conns") - s0("conns"), s1("stmts") - s0("stmts")))
+  }
+
   test("sequential batches land as global latest-wins; replay is a no-op") {
     val url = mkUrl("seq")
     val sink = new JdbcSink(url, "users")
@@ -48,11 +57,14 @@ class JdbcSinkSpec extends SparkSpecBase {
     val b1 = env(Seq(("UPDATE", 5L, 2L, 21.0, "click"),
       ("DELETE", 6L, 1L, 0.0, "error"), ("INSERT", 7L, 3L, 30.0, "signup")))
     assert(sink.applyBatch(b0, 0L))
-    assert(sink.applyBatch(b1, 1L))
+    // a steady batch (tables already provisioned): the ledger check (1
+    // connection: ledger probe + lookup) and the promote (1 connection:
+    // lock, ledger insert, merge, resolution check, staging sweep)
+    assert(roundTrips(sink.applyBatch(b1, 1L)) === ((true, (2L, 7L))))
     assert(liveRows(url, sink) === mergedRows(b0, b1))
     // replay of either batch: ledger hit, content untouched
-    assert(!sink.applyBatch(b0, 0L))
-    assert(!sink.applyBatch(b1, 1L))
+    assert(roundTrips(sink.applyBatch(b0, 0L)) === ((false, (1L, 2L))))
+    assert(roundTrips(sink.applyBatch(b1, 1L)) === ((false, (1L, 2L))))
     assert(liveRows(url, sink) === mergedRows(b0, b1))
   }
 

@@ -77,4 +77,28 @@ class ScaleProbeSpec extends SparkSpecBase {
     x3.filter(col("vec_id") < 10000000L).as[(Long, Array[Float], Int)]
       .collect().foreach { case (id, e, _) => assert(e.toSeq === orig(id)) }
   }
+
+  test("the N× corpus cache is keyed by base corpus, not by scale alone") {
+    import spark.implicits._
+    def corpus(nDocs: Int): String = {
+      val d = tmpDir("scale_base")
+      (0 until nDocs).map(i => (i.toLong, s"w$i x", "en", "web", 4L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$d/documents.parquet")
+      Seq((0L, Array.fill(64)(0.5f), 0)).toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$d/embeddings.parquet")
+      d
+    }
+    val (a, b) = (corpus(2), corpus(3))
+    val (ra, rb) = (ScaleProbe.synthDir(spark, a, 2), ScaleProbe.synthDir(spark, b, 2))
+    try {
+      assert(ra !== rb, "two base corpora at one scale shared one cache dir")
+      assert(Tables.load(spark, ra, "documents").count() === 4)
+      assert(Tables.load(spark, rb, "documents").count() === 6)
+      assert(ScaleProbe.synthDir(spark, a, 2) === ra)
+    } finally // the cache dirs are per base corpus: drop both with their bases
+      (Seq(ra, rb).map(new java.io.File(_).getParentFile) ++
+        Seq(a, b).map(new java.io.File(_)))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
 }

@@ -7,10 +7,9 @@ import graft.streaming.{LshIndex, StoreIO}
 /** Long-horizon control-plane trend for the OpLog-backed index stores: the
   * r12 fix cached write-once log entries so the per-batch fold costs one
   * list + ONE new-entry read instead of re-reading the whole log
-  * (O(batches²) round trips over a stream's life). CommitProbe's 6-batch
-  * table showed the slope change; this spec PINS the steady state a
-  * 10k-batch stream depends on, over 50 batches: per-batch control-plane
-  * reads must be exactly flat — any residual O(n) term in the fold shows
+  * (O(batches²) round trips over a stream's life). This spec PINS the
+  * steady state a 10k-batch stream depends on, over 50 batches: per-batch
+  * control-plane reads must be exactly flat — any residual O(n) term in the fold shows
   * up as a monotone drift the equality assertion catches. Global
   * [[StoreIO.Stats]] counters are safe to meter here because sbt runs
   * forked suites sequentially and nothing else touches StoreIO mid-test. */

@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars without
-# paying sbt startup cost. Usage: tools/run.sh graft.Probe [args...]
+# paying sbt startup cost. Usage: tools/run.sh graft.Smoke [args...]
 set -e
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
