@@ -20,13 +20,14 @@ import org.apache.spark.sql.types._
   * doc_id, embarrassingly parallel over documents; the LSH banding (e03)
   * exists precisely so the 100 TB near-dup join is bucket-local instead of
   * all-pairs. No UDFs — all lambdas are Catalyst higher-order functions.
+  *
+  * The near-dup queries shingle, sign, band and verify through
+  * [[SetSimilarity]]; their DuckDB twins share the signature and banding
+  * CTE fragments defined beside `minhashCte`.
   */
 object Extensions {
   import Tables.load
-
-  private val P = 2147483647L // 2^31 - 1
-  private val A = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
-  private val B = Seq(3L, 5L, 59L, 61L, 67L, 71L, 73L, 79L)
+  import SetSimilarity._
 
   /** Shared cross-engine token hash (see module doc) — first 32 md5 bits,
     * unsigned. Direct-from-digest expression, bit-identical to the previous
@@ -35,43 +36,10 @@ object Extensions {
     * [[graft.functions.TokenHash64]]. */
   def tokenHash(t: Column): Column = graft.functions.TokenHash64(t)
 
-  /** MinHash-LSH banding of a (doc_id, text) corpus: k=8 permutation
-    * hashes over the distinct unigram set, banded 4×2 → one (doc_id,
-    * band, bucket) row per band. The shared signature pipeline of the
-    * e02/e03 queries and the incremental [[graft.streaming.LshIndex]] —
-    * docs sharing any (band, bucket) are near-dup candidates. */
-  /** k=8 MinHash signature columns (sig0..sig7) per doc — the shared
-    * signature pass under minhashBands, lshComponents, and e63's sweep. */
-  def minhashSigs(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
-      .withColumn("h", tokenHash(col("t")))
-    val sigs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-      min((col("h") * a + b) % P).as(s"sig$i")
-    }
-    tok.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*)
-  }
-
-  def minhashBands(docs: DataFrame): DataFrame =
-    bandsFromSigs(minhashSigs(docs), 2, 4)
-
-  /** Band a k=8 signature frame (sig0..sig7) as r rows × b bands. The
-    * r=2 bucket keeps the original exact product formula (`sig·P + sig` —
-    * bit-compatible with every stored e03-family index); other r combine
-    * their r sigs through the md5 token hash, the e63-sweep formula (an
-    * r-way product would overflow BIGINT). Shared by the one-shot banding
-    * queries and [[graft.streaming.LshIndex]]'s re-banding migration. */
-  def bandsFromSigs(sig: DataFrame, r: Int, b: Int): DataFrame = {
-    require(r > 0 && b > 0 && r * b <= 8, s"banding r=$r b=$b needs r*b <= 8")
-    def bucket(j: Int): Column =
-      if (r == 2) col(s"sig${2 * j}") * P + col(s"sig${2 * j + 1}")
-      else tokenHash(concat_ws(",",
-        (0 until r).map(i => col(s"sig${r * j + i}").cast(StringType)): _*))
-    sig.select(col("doc_id"), explode(array(
-      (0 until b).map(j => struct(lit(j).as("band"), bucket(j).as("bucket"))): _*
-    )).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
+  /** The doc_id%10 audit sample of the documents corpus: the input of the
+    * signature artifact, the candidate graph and the unigram verify sets. */
+  private def sample10(s: SparkSession, d: String): DataFrame =
+    load(s, d, "documents").filter(col("doc_id") % 10 === 0)
 
   /** e113b's banded candidate stage over a per-doc shingle-set frame
     * `(doc_id, g ARRAY<LONG>)`: 8 minhash permutations over the shingle
@@ -90,11 +58,7 @@ object Extensions {
     * exercise the cap with tiny corpora and tiny caps. */
   private[graft] def lshBandCandidates(sets: DataFrame,
                                        maxBucket: Long = 128L): DataFrame = {
-    val gs = sets.select(col("doc_id"), explode(col("g")).as("h"))
-    val sigCols = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-      min((col("h") * a + b) % P).as(s"sig$i")
-    }
-    val sig = gs.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
+    val sig = signatures(sets.select(col("doc_id"), explode(col("g")).as("h")))
     val bands = bandsFromSigs(sig, 2, 4)
     // the hot set is tiny by construction (≤ |corpus|/maxBucket buckets
     // can exceed the cap) → broadcast anti-join, never a shuffle
@@ -102,10 +66,7 @@ object Extensions {
       .agg(count(lit(1)).as("m")).filter(col("m") > maxBucket)
       .select(col("band"), col("bucket"))
     val kept = bands.join(broadcast(hotB), Seq("band", "bucket"), "left_anti")
-    kept.as("x").join(kept.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
+    sharedBands(kept, "a", "b").select("a", "b")
   }
 
   /** The e113-family 3-gram shingle-set frame `(doc_id, g ARRAY<LONG>)`
@@ -114,17 +75,8 @@ object Extensions {
     * queries read it through [[shingleSets3Artifact]] (write-once parquet,
     * one build per corpus snapshot); this stays the from-scratch builder
     * and the probe/spec entry point. */
-  private[graft] def shingleSets3(s: SparkSession, d: String): DataFrame = {
-    val tkc = toks(col("text"))
-    load(s, d, "documents")
-      .select(col("doc_id"), tkc.as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(transform(sequence(lit(0), size(col("tk")) - 3),
-          i => tokenHash(concat_ws(" ",
-            element_at(col("tk"), i + 1), element_at(col("tk"), i + 2),
-            element_at(col("tk"), i + 3))))).as("g"))
-  }
+  private[graft] def shingleSets3(s: SparkSession, d: String): DataFrame =
+    shingleSets(load(s, d, "documents"), 3, "g", "doc_id")
 
   /** e113's EXACT verified-pair stage: inverted co-shingle postings join,
     * Jaccard ≥ 0.5 on the pair stream. Σ df²-bounded (the reason e113b's
@@ -190,16 +142,9 @@ object Extensions {
     // shuffles the corpus-sized sets frame — the opposite of its purpose
     val needed = sets.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    val t1 = needed.select(col("doc_id").as("a"), col("g").as("g1"))
-    val t2 = needed.select(col("doc_id").as("b"), col("g").as("g2"))
-    cand.join(t1, "a").join(t2, "b")
-      // sealed: one intersect per candidate in a post-join Project — the
-      // optimizer otherwise folds the ≥0.5 filter (and so the intersect,
-      // twice) into the verify join's condition; see SealedEval
-      .withColumn("nc", functions.SealedEval.seal(
-        size(array_intersect(col("g1"), col("g2")))))
-      .filter(col("nc").cast(DoubleType)
-        / (size(col("g1")) + size(col("g2")) - col("nc")) >= 0.5)
+    withSets(cand, needed, "a", "b", "g")
+      .withColumn("nc", overlap(col("g1"), col("g2")))
+      .filter(jaccard(col("nc"), size(col("g1")), size(col("g2"))) >= 0.5)
       .select(col("a"), col("b"))
   }
 
@@ -212,18 +157,14 @@ object Extensions {
     * [[corpusArtifact]]: the banding self-join runs once per corpus
     * snapshot (built on the signature artifact, so the tokenize pass is
     * shared too); every consumer after the first reads a bare parquet
-    * scan. e03b keeps its own inline from-scratch prefix as the gate on
-    * the candidate math itself. */
+    * scan. e03b runs the same [[SetSimilarity]] steps from scratch instead
+    * of reading this artifact: it is the gate on the candidate math
+    * itself. */
   private[graft] def lshCandidates(s: SparkSession, d: String): DataFrame =
     corpusArtifact(s, d, "lsh_cand_pairs_s10") {
       val bands = bandsFromSigs(minhashSigsArtifact(s, d), 2, 4)
-      bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
+      sharedBands(bands, "d1", "d2").select("d1", "d2")
     }
-
-  private def toks(c: Column): Column = split(c, " ")
 
   /** Exact NTILE(10)-over-doc_id decile map WITHOUT a global window.
     * NTILE is rank-arithmetic: with N rows, q = N/10, r = N%10, tile t's
@@ -528,22 +469,14 @@ object Extensions {
     * the audit family, so both evaluators read the materialized pairs. */
   private[graft] def sampledTruthPairs(s: SparkSession, d: String): DataFrame =
     corpusArtifact(s, d, "truth_pairs_s10_j01") {
-      val sets = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), array_distinct(toks(col("text"))).as("tk"))
+      val sets = tokenSets(sample10(s, d))
         // checkpoint, not persist: both join sides of the one-time build
         // read it from storage; local blocks release on GC
         // (ContextCleaner) instead of accumulating for the session.
         .transform(operators.RoundCheckpointer.resolve(s, None).truncate)
-      val a = sets.select(col("doc_id").as("d1"), col("tk").as("tk1"))
-      val b = sets.select(col("doc_id").as("d2"), col("tk").as("tk2"))
-      a.join(b, col("d1") < col("d2"))
-        // sealed: the ≥0.1 filter must not fold into the nested-loop join
-        // condition (intersect twice per ordered pair); see SealedEval
-        .withColumn("nc", functions.SealedEval.seal(
-          size(array_intersect(col("tk1"), col("tk2")))))
-        .filter(col("nc").cast(DoubleType)
-          / (size(col("tk1")) + size(col("tk2")) - col("nc")) >= 0.1)
+      allPairsWithSets(sets, "d1", "d2", "tk")
+        .withColumn("nc", overlap(col("tk1"), col("tk2")))
+        .filter(jaccard(col("nc"), size(col("tk1")), size(col("tk2"))) >= 0.1)
         .select("d1", "d2")
     }
 
@@ -574,16 +507,8 @@ object Extensions {
     // the byte-coalesced width (34 tasks total, ~2x wall) while still
     // growing with data at scale. Blocks are GC-released (ContextCleaner);
     // explicit unpersist is a no-op on checkpointed frames.
-    val sig = ck.truncate(minhashSigs(load(s, d, "documents")
-      .filter(col("doc_id") % 10 === 0)))
-    val bands = sig.select(col("doc_id"), explode(array(
-      (0 until 4).map(j => struct(lit(j).as("band"),
-        (col(s"sig${2 * j}") * P + col(s"sig${2 * j + 1}")).as("bucket"))): _*
-    )).as("bb")).select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val edges = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
+    val sig = ck.truncate(minhashSigs(sample10(s, d)))
+    val edges = sharedBands(bandsFromSigs(sig, 2, 4), "a", "b").select("a", "b")
     // feeds every round's join — eager: nothing downstream materializes it
     // before the first round otherwise
     val und = ck.truncate(edges
@@ -724,8 +649,7 @@ object Extensions {
     * signature math itself; consumers of DERIVED results probe this. */
   private[graft] def minhashSigsArtifact(s: SparkSession, d: String): DataFrame =
     corpusArtifact(s, d, "minhash_sigs_s10") {
-      minhashSigs(load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0).select(col("doc_id"), col("text")))
+      minhashSigs(sample10(s, d).select(col("doc_id"), col("text")))
     }
 
   /** Disk-materialized [[shingleSets3]] — the e113-family shared 3-gram
@@ -774,23 +698,14 @@ object Extensions {
     // unigram token set (shingle=1 documented simplification; the 31-token
     // vocabulary makes larger shingles degenerate).
     "e02_minhash_sig" -> { (s, d) =>
-      val tok = load(s, d, "documents")
-        .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
-        .withColumn("h", tokenHash(col("t")))
-      val sigs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        min((col("h") * a + b) % P).as(s"sig$i")
-      }
-      tok.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*).orderBy("doc_id")
+      minhashSigs(load(s, d, "documents")).orderBy("doc_id")
     },
     // E1/E2 MinHash via the native single-buffer aggregate (one Array[Long](8)
     // buffer + one loop per row instead of 8 independent min() aggregates) —
     // same signatures, same oracle as e02.
     "e02b_minhash_native" -> { (s, d) =>
       graft.functions.MinHashAgg.register(s)
-      val tok = load(s, d, "documents")
-        .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
-        .withColumn("h", tokenHash(col("t")))
-      tok.groupBy(col("doc_id"))
+      tokenHashes(load(s, d, "documents")).groupBy(col("doc_id"))
         .agg(graft.functions.MinHashAgg.minhash(col("h")).as("sig"))
         .select(col("doc_id") +: (0 until 8).map(i =>
           element_at(col("sig"), i + 1).as(s"sig$i")): _*)
@@ -800,18 +715,8 @@ object Extensions {
     // per-band bucket stats + candidate-pair counts (k·(k−1)/2 per bucket).
     // This is the structure that makes near-dup detection bucket-local at scale.
     "e03_lsh_buckets" -> { (s, d) =>
-      val tok = load(s, d, "documents")
-        .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
-        .withColumn("h", tokenHash(col("t")))
-      val sigs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        min((col("h") * a + b) % P).as(s"sig$i")
-      }
-      val sig = tok.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*)
-      val bands = sig.select(col("doc_id"), explode(array(
-        (0 until 4).map(j => struct(lit(j).as("band"),
-          (col(s"sig${2 * j}") * P + col(s"sig${2 * j + 1}")).as("bucket"))): _*
-      )).as("bb")).select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      bands.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("k"))
+      minhashBands(load(s, d, "documents"))
+        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("k"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_buckets"),
           sum(when(col("k") >= 2, 1L).otherwise(0L)).as("n_collision_buckets"),
@@ -824,36 +729,13 @@ object Extensions {
     // doc_id%10 to bound output; at 100 TB the same join runs per bucket
     // partition.
     "e03b_lsh_pair_join" -> { (s, d) =>
-      val tok = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
-        .withColumn("h", tokenHash(col("t")))
-      val sigs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        min((col("h") * a + b) % P).as(s"sig$i")
-      }
-      val sig = tok.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*)
-      val bands = sig.select(col("doc_id"), explode(array(
-        (0 until 4).map(j => struct(lit(j).as("band"),
-          (col(s"sig${2 * j}") * P + col(s"sig${2 * j + 1}")).as("bucket"))): _*
-      )).as("bb")).select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .agg(count(lit(1)).as("n_shared_bands"))
-      val sets = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), array_distinct(toks(col("text"))).as("tk"))
-      val t1 = sets.select(col("doc_id").as("d1"), col("tk").as("tk1"))
-      val t2 = sets.select(col("doc_id").as("d2"), col("tk").as("tk2"))
-      cand.join(t1, "d1").join(t2, "d2")
-        // sealed: evaluate the intersect once (CollapseProject would inline
-        // it into numerator AND denominator); see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("tk1"), col("tk2")))))
+      val cand = sharedBands(minhashBands(sample10(s, d)), "d1", "d2")
+      // sealed overlap: evaluated once, not inlined into numerator AND
+      // denominator by CollapseProject
+      withSets(cand, tokenSets(sample10(s, d)), "d1", "d2", "tk")
+        .withColumn("n_common", overlap(col("tk1"), col("tk2")))
         .select(col("d1"), col("d2"), col("n_shared_bands"),
-          (col("n_common").cast(DoubleType)
-            / (size(col("tk1")) + size(col("tk2")) - col("n_common"))).as("jaccard"))
+          jaccard(col("n_common"), size(col("tk1")), size(col("tk2"))).as("jaccard"))
         .orderBy("d1", "d2")
     },
     // E1 containment (|A∩B| / |A|) over the e03b LSH candidates — the
@@ -873,14 +755,8 @@ object Extensions {
     // 1.0 folds into the top bin (9) so bins stay 0..9. Scale: candidates
     // are bucket-local (never all-pairs); the histogram is a 10-row agg.
     "e112_jaccard_histogram" -> { (s, d) =>
-      val cand = lshCandidates(s, d)
-      val sets = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), array_distinct(toks(col("text"))).as("tk"))
-      cand.join(sets.select(col("doc_id").as("d1"), col("tk").as("tk1")), "d1")
-        .join(sets.select(col("doc_id").as("d2"), col("tk").as("tk2")), "d2")
-        .select(graft.functions.SealedEval.seal(
-            size(array_intersect(col("tk1"), col("tk2")))).as("nc"),
+      withSets(lshCandidates(s, d), tokenSets(sample10(s, d)), "d1", "d2", "tk")
+        .select(overlap(col("tk1"), col("tk2")).as("nc"),
           size(col("tk1")).as("n1"), size(col("tk2")).as("n2"))
         .select(least(expr("(10 * nc) div (n1 + n2 - nc)"), lit(9))
           .cast(LongType).as("bin"))
@@ -888,17 +764,11 @@ object Extensions {
         .orderBy("bin")
     },
     "e43_containment" -> { (s, d) =>
-      val cand = lshCandidates(s, d)
-      val sets = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), array_distinct(toks(col("text"))).as("tk"))
-      val t1 = sets.select(col("doc_id").as("d1"), col("tk").as("tk1"))
-      val t2 = sets.select(col("doc_id").as("d2"), col("tk").as("tk2"))
-      val joined = cand.join(t1, "d1").join(t2, "d2")
-        // sealed: keeps the containment filter out of the join condition
-        // in BOTH union branches; see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("tk1"), col("tk2")))))
+      // sealed overlap: keeps the containment filter out of the join
+      // condition in BOTH union branches
+      val joined = withSets(lshCandidates(s, d), tokenSets(sample10(s, d)),
+          "d1", "d2", "tk")
+        .withColumn("n_common", overlap(col("tk1"), col("tk2")))
       val fwd = joined.select(col("d1").as("a"), col("d2").as("b"),
         (col("n_common").cast(DoubleType) / size(col("tk1"))).as("containment"))
       val rev = joined.select(col("d2").as("a"), col("d1").as("b"),
@@ -918,16 +788,10 @@ object Extensions {
     // sizes differ by more than 10× can never reach the 0.1 threshold —
     // the join condition prunes it before the O(|set|) intersect runs.
     "e04_ngram_jaccard" -> { (s, d) =>
-      // persisted: both join sides read the md5-shingle transform from cache
+      // checkpointed: both join sides read the md5-shingle transform once
       // instead of recomputing it per branch
-      val base = load(s, d, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("doc_id"), col("lang"),
-          array_distinct(transform(sequence(lit(0), size(col("tk")) - 2),
-            i => tokenHash(concat(element_at(col("tk"), i + 1), lit(" "),
-              element_at(col("tk"), i + 2))))).as("bg"))
+      val base = shingleSets(load(s, d, "documents").filter(col("doc_id") % 5 === 0),
+          2, "bg", "doc_id", "lang")
         .withColumn("nb", size(col("bg")))
         .localCheckpoint() // both join sides; GC-released, see sampledTruthPairs
       val a = base.select(col("doc_id").as("d1"), col("lang"),
@@ -936,13 +800,12 @@ object Extensions {
         col("bg").as("bg2"), col("nb").as("nb2"))
       a.join(b, col("lang") === col("lang2") && col("d1") < col("d2") &&
           col("nb1") * 10 >= col("nb2") && col("nb2") * 10 >= col("nb1"))
-        // sealed: keeps the intersect OUT of the join condition (where the
-        // optimizer would run it before the cheap prefilters, twice per
-        // pair) — one evaluation per surviving pair, see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("bg1"), col("bg2")))))
-        .withColumn("jaccard", col("n_common").cast(DoubleType)
-          / (size(col("bg1")) + size(col("bg2")) - col("n_common")))
+        // sealed overlap: the intersect stays OUT of the join condition
+        // (where the optimizer would run it before the cheap prefilters,
+        // twice per pair) — one evaluation per surviving pair
+        .withColumn("n_common", overlap(col("bg1"), col("bg2")))
+        .withColumn("jaccard",
+          jaccard(col("n_common"), size(col("bg1")), size(col("bg2"))))
         .filter(col("jaccard") >= 0.1)
         .select("lang", "d1", "d2", "jaccard")
         .orderBy("lang", "d1", "d2")
@@ -963,14 +826,8 @@ object Extensions {
     // too large to coalesce, which is the 100 TB regime it exists for.)
     "e04c_jaccard_blocked" -> { (s, d) =>
       val B = 4
-      val base = load(s, d, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("doc_id"), col("lang"),
-          array_distinct(transform(sequence(lit(0), size(col("tk")) - 2),
-            i => tokenHash(concat(element_at(col("tk"), i + 1), lit(" "),
-              element_at(col("tk"), i + 2))))).as("bg"))
+      val base = shingleSets(load(s, d, "documents").filter(col("doc_id") % 5 === 0),
+          2, "bg", "doc_id", "lang")
         .withColumn("nb", size(col("bg")))
         .withColumn("blk", pmod(xxhash64(col("doc_id")), lit(B.toLong)))
         .localCheckpoint() // replicas read the shingle transform once, not 2B×; GC-released
@@ -986,11 +843,10 @@ object Extensions {
           col("a_row") === col("b_row") && col("a_col") === col("b_col") &&
           col("d1") < col("d2") &&
           col("nb1") * 10 >= col("nb2") && col("nb2") * 10 >= col("nb1"))
-        // sealed: same plan discipline as e04; see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("bg1"), col("bg2")))))
-        .withColumn("jaccard", col("n_common").cast(DoubleType)
-          / (size(col("bg1")) + size(col("bg2")) - col("n_common")))
+        // sealed overlap: same plan discipline as e04
+        .withColumn("n_common", overlap(col("bg1"), col("bg2")))
+        .withColumn("jaccard",
+          jaccard(col("n_common"), size(col("bg1")), size(col("bg2"))))
         .filter(col("jaccard") >= 0.1)
         .select("lang", "d1", "d2", "jaccard")
         .orderBy("lang", "d1", "d2")
@@ -1015,14 +871,8 @@ object Extensions {
     // shingle transform once instead of recomputing md5 per branch.
     "e04b_jaccard_sparse" -> { (s, d) =>
       val maxDf = 8
-      val inv = load(s, d, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(transform(sequence(lit(0), size(col("tk")) - 2),
-            i => tokenHash(concat(element_at(col("tk"), i + 1), lit(" "),
-              element_at(col("tk"), i + 2)))))).as("sh"))
+      val inv = shingleRows(load(s, d, "documents").filter(col("doc_id") % 5 === 0),
+          2, "sh", "doc_id", "lang")
         .localCheckpoint() // feeds hot-shingle cut AND postings; GC-released
       val hot = inv.groupBy(col("lang"), col("sh"))
         .agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
@@ -3146,14 +2996,7 @@ object Extensions {
     // one map-side join pass over the corpus (the same economics as e04b's
     // inverted index, but with the tiny side known in advance).
     "e29_decontamination" -> { (s, d) =>
-      val grams = load(s, d, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 3)
-        .select(col("doc_id"),
-          explode(array_distinct(transform(sequence(lit(0), size(col("tk")) - 3),
-            i => tokenHash(concat_ws(" ",
-              element_at(col("tk"), i + 1), element_at(col("tk"), i + 2),
-              element_at(col("tk"), i + 3)))))).as("g"))
+      val grams = shingleRows(load(s, d, "documents"), 3, "g", "doc_id")
       val evalGrams = grams.filter(col("doc_id") % 97 === 0)
         .select(col("g")).distinct()
       val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
@@ -3172,13 +3015,7 @@ object Extensions {
     // release artifact — the corpus-level twin of e25's dedup audit.
     "e32_decontam_scrub" -> { (s, d) =>
       val docs = load(s, d, "documents")
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
-      val grams = docs.filter(size(col("tk")) >= 3)
-        .select(col("doc_id"),
-          explode(array_distinct(transform(sequence(lit(0), size(col("tk")) - 3),
-            i => tokenHash(concat_ws(" ",
-              element_at(col("tk"), i + 1), element_at(col("tk"), i + 2),
-              element_at(col("tk"), i + 3)))))).as("g"))
+      val grams = shingleRows(docs, 3, "g", "doc_id")
       val evalGrams = grams.filter(col("doc_id") % 97 === 0)
         .select(col("g")).distinct()
       val contaminated = grams.filter(col("doc_id") % 97 =!= 0)
@@ -3451,17 +3288,10 @@ object Extensions {
         val b = tokenHash(c.cast(StringType)) % 100
         when(b < 80, "train").when(b < 90, "val").otherwise("test")
       }
-      val sets = load(s, d, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), array_distinct(toks(col("text"))).as("tk"))
-      lshCandidates(s, d)
-        .join(sets.select(col("doc_id").as("d1"), col("tk").as("tk1")), "d1")
-        .join(sets.select(col("doc_id").as("d2"), col("tk").as("tk2")), "d2")
-        // sealed: one intersect per candidate, post-join; see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("tk1"), col("tk2")))))
-        .filter(col("n_common").cast(DoubleType)
-          / (size(col("tk1")) + size(col("tk2")) - col("n_common")) >= 0.5)
+      // sealed overlap: one intersect per candidate, post-join
+      withSets(lshCandidates(s, d), tokenSets(sample10(s, d)), "d1", "d2", "tk")
+        .withColumn("n_common", overlap(col("tk1"), col("tk2")))
+        .filter(jaccard(col("n_common"), size(col("tk1")), size(col("tk2"))) >= 0.5)
         .select(least(splitOf(col("d1")), splitOf(col("d2"))).as("split_a"),
           greatest(splitOf(col("d1")), splitOf(col("d2"))).as("split_b"))
         .groupBy(col("split_a"), col("split_b"))
@@ -3819,15 +3649,10 @@ object Extensions {
       // filter runs on a narrow (doc_id, n) table BEFORE arrays attach
       // (drops ~30% of candidates while rows are still 16 bytes); (3) sizes
       // ride the filtered pairs so the verify never recomputes them.
-      val base = load(s, d, "documents")
-        .filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("doc_id"), col("lang"),
-          array_distinct(transform(sequence(lit(0), size(col("tk")) - 2),
-            i => (tokenHash(concat(element_at(col("tk"), i + 1), lit(" "),
-              element_at(col("tk"), i + 2))) - lit(2147483648L))
-              .cast(IntegerType))).as("bg"))
+      val base = shingleSets(load(s, d, "documents").filter(col("doc_id") % 2 === 0),
+          2, "bg", "doc_id", "lang")
+        .withColumn("bg",
+          transform(col("bg"), h => (h - lit(2147483648L)).cast(IntegerType)))
         .localCheckpoint() // feeds the posting explode AND both verify sides; GC-released
       val post = base.select(col("doc_id"), col("lang"), explode(col("bg")).as("h"))
       val dfc = post.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -3875,12 +3700,10 @@ object Extensions {
       // session's shuffle parallelism — scale-adaptive in both directions,
       // never a constant.
       candF.join(s1, "d1").repartition(kVerify, col("d2")).join(s2, "d2")
-        // sealed: the ≥0.5 filter otherwise folds into the array-attach
-        // join's condition (intersect twice per candidate); see SealedEval
-        .withColumn("n_common", graft.functions.SealedEval.seal(
-          size(array_intersect(col("bg1"), col("bg2")))))
-        .withColumn("jaccard", col("n_common").cast(DoubleType)
-          / (col("n1") + col("n2") - col("n_common")))
+        // sealed overlap: the ≥0.5 filter otherwise folds into the
+        // array-attach join's condition (intersect twice per candidate)
+        .withColumn("n_common", overlap(col("bg1"), col("bg2")))
+        .withColumn("jaccard", jaccard(col("n_common"), col("n1"), col("n2")))
         .filter(col("jaccard") >= 0.5)
         .select("lang", "d1", "d2", "jaccard")
         .orderBy("lang", "d1", "d2")
@@ -4080,20 +3903,8 @@ object Extensions {
       // only the r=4×b=2 bucketing is new (4 sigs md5-combined: a 4-way
       // integer product would overflow BIGINT)
       val r2b4 = lshCandidates(s, d)
-      val sig = minhashSigsArtifact(s, d)
-      val bd = sig.select(col("doc_id"), explode(array(
-        (0 until 2).map { j =>
-          struct(lit(j).as("band"), tokenHash(concat_ws(",",
-            (0 until 4).map(i => col(s"sig${4 * j + i}").cast(StringType)): _*))
-            .as("bucket")) }: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"),
-          col("bb.bucket").as("bucket"))
-      val r4b2 = bd.as("x").join(bd.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
+      val r4b2 = sharedBands(bandsFromSigs(minhashSigsArtifact(s, d), 4, 2),
+        "d1", "d2").select("d1", "d2")
       def audit(cfg: String, cand: DataFrame): DataFrame = {
         val nT = truth.agg(count(lit(1)).as("n_truth"))
         val nC = cand.agg(count(lit(1)).as("n_cand"))
@@ -4195,15 +4006,41 @@ object Extensions {
       .otherwise(round(lit(num) / kth.cast(DoubleType), 3))
   }
 
-  private val minhashCte: String = {
-    val hs = String.format(tokenHashSql, "t")
+  // DuckDB twins of the SetSimilarity sign and band steps, spelled
+  // independently of the Spark code (only the constants are shared).
+
+  /** `sig` CTE: the k=8 MinHash signature per doc_id over hash column `h`
+    * of CTE `src` ([[SetSimilarity.signatures]]). */
+  private def sigCte(src: String, h: String): String = {
     val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-      s"MIN((h * $a + $b) % $P) AS sig$i"
+      s"MIN(($h * $a + $b) % $P) AS sig$i"
     }.mkString(", ")
-    s"""tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t FROM documents),
-       |hh AS (SELECT doc_id, $hs AS h FROM tk),
-       |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id)""".stripMargin
+    s"sig AS (SELECT doc_id, $sigExprs FROM $src GROUP BY doc_id)"
   }
+
+  /** CTE `name`: `sig` banded 2×4 with the exact product bucket
+    * ([[SetSimilarity.bandsFromSigs]] at r=2). */
+  private def bandsCte(name: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
+       |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
+       |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
+       |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig)""".stripMargin
+
+  /** tk → hh → sig over the distinct unigrams of the documents `where`
+    * selects ([[SetSimilarity.minhashSigs]]). */
+  private def unigramSigCte(where: String): String =
+    s"""tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
+       |       FROM documents$where),
+       |hh AS (SELECT doc_id, ${String.format(tokenHashSql, "t")} AS h FROM tk),
+       |${sigCte("hh", "h")}""".stripMargin
+
+  private val minhashCte: String = unigramSigCte("")
+  private val sampledSigCte: String = unigramSigCte(" WHERE doc_id % 10 = 0")
+
+  /** tk → hh → sig → bands over the doc_id%10 sample: the candidate
+    * prefix of the e03b-family and label-graph twins. */
+  private val sampledBandsCte: String = s"$sampledSigCte,\n${bandsCte("bands")}"
 
   private val denseJaccardSql: String =
     """WITH base AS (
@@ -4480,30 +4317,14 @@ object Extensions {
          |SELECT * FROM sig ORDER BY doc_id""".stripMargin,
     "e03_lsh_buckets" ->
       s"""WITH $minhashCte,
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |${bandsCte("bands")},
          |bk AS (SELECT band, bucket, COUNT(*) AS k FROM bands GROUP BY band, bucket)
          |SELECT band, COUNT(*) AS n_buckets,
          |  SUM(CASE WHEN k >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_collision_buckets,
          |  SUM(k * (k - 1) // 2)::BIGINT AS n_candidate_pairs
          |FROM bk GROUP BY band ORDER BY band""".stripMargin,
     "e03b_lsh_pair_join" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS n_shared_bands
          |  FROM bands x JOIN bands y
@@ -4519,19 +4340,7 @@ object Extensions {
     },
     // exact integer floor-div binning over the same candidate CTE
     "e112_jaccard_histogram" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -4546,19 +4355,7 @@ object Extensions {
          |FROM j GROUP BY bin ORDER BY bin""".stripMargin
     },
     "e43_containment" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -4743,20 +4540,8 @@ object Extensions {
         |  n_bytes, s::DOUBLE / cnt AS mean_byte
         |FROM px ORDER BY doc_id""".stripMargin),
     "e21_dedup_components" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -4778,20 +4563,8 @@ object Extensions {
     // matching the Spark side's least(depth, 64) — truncation is visible
     // in both engines, never a silent row drop
     "e73_component_depth" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -4990,21 +4763,9 @@ object Extensions {
     // so the acceptance rule the streaming ingest enforces is itself
     // cross-engine verified
     "e90_reject_rule" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       val agree = (0 until 8).map(i =>
         s"(CASE WHEN s1.sig$i = s2.sig$i THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -5052,20 +4813,8 @@ object Extensions {
          |  round(hits_at_10::DOUBLE / least(10, n_relevant), 6) AS recall_at_10
          |FROM ag""".stripMargin,
     "e89_split_leakage" -> {
-      val hs = String.format(tokenHashSql, "t")
       val hid = String.format(tokenHashSql, "doc_id::VARCHAR")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -5247,20 +4996,8 @@ object Extensions {
         |  est_upper - exact_disc AS err
         |FROM ec ORDER BY q""".stripMargin,
     "e59_cluster_sizes" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -5315,10 +5052,6 @@ object Extensions {
         |SELECT lang, n_tokens, w::DOUBLE / z::DOUBLE AS temp_share
         |FROM w CROSS JOIN z ORDER BY lang""".stripMargin,
     "e63_lsh_sweep" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       def h4(j: Int) = String.format(tokenHashSql,
         (0 until 4).map(i => s"sig${4 * j + i}::VARCHAR")
           .mkString("concat_ws(',', ", ", ", ")"))
@@ -5329,15 +5062,8 @@ object Extensions {
          |  FROM sets a JOIN sets b ON a.doc_id < b.doc_id
          |  WHERE len(list_intersect(a.tk, b.tk))::DOUBLE
          |    / (len(a.tk) + len(b.tk) - len(list_intersect(a.tk, b.tk))) >= 0.1),
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |b1 AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledSigCte,
+         |${bandsCte("b1")},
          |cand1 AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM b1 x JOIN b1 y
@@ -5378,20 +5104,8 @@ object Extensions {
         |  count(DISTINCT lang) AS n_langs
         |FROM docs GROUP BY source ORDER BY source""".stripMargin,
     "e25_dedup_corpus" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -5714,21 +5428,9 @@ object Extensions {
     // e21's closure + the shared hash of the component label; the
     // split-cluster invariant is recomputed, not assumed
     "e102_cluster_shards" -> {
-      val hs = String.format(tokenHashSql, "t")
       val lh = String.format(tokenHashSql, "CAST(comp AS VARCHAR)")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -5756,20 +5458,8 @@ object Extensions {
     // e21's recursive closure reused verbatim; weights are floor(1e9/k)
     // integers so no division semantics cross the engine boundary
     "e101_dup_weights" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -5940,21 +5630,9 @@ object Extensions {
     // CTE), splits each node by the same doc_id hash, and folds the
     // per-cluster distinct split list into the set string
     "e104_split_leak_clusters" -> {
-      val hs = String.format(tokenHashSql, "t")
       val hid = String.format(tokenHashSql, "node::VARCHAR")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -6033,21 +5711,14 @@ object Extensions {
       val hg = String.format(tokenHashSql,
         "w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]")
       val hid = String.format(tokenHashSql, "comp::VARCHAR")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((g * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
          |tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |sh AS (SELECT doc_id,
          |         unnest(list_distinct([$hg FOR i IN range(1, len(w) - 1)])) AS g
          |       FROM tk WHERE len(w) >= 3),
          |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-         |sig AS (SELECT doc_id, $sigExprs FROM sh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |${sigCte("sh", "g")},
+         |${bandsCte("bands")},
          |hot AS (SELECT band, bucket FROM bands
          |        GROUP BY band, bucket HAVING COUNT(*) > 128),
          |kept AS (SELECT bands.* FROM bands ANTI JOIN hot USING (band, bucket)),
@@ -6094,9 +5765,6 @@ object Extensions {
       val hg = String.format(tokenHashSql,
         "w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]")
       val hid = String.format(tokenHashSql, "comp::VARCHAR")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((g * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
          |tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |sh AS (SELECT doc_id,
@@ -6109,12 +5777,8 @@ object Extensions {
          |nd_e AS (SELECT a, b FROM shared_e
          |         JOIN sz sa ON a = sa.doc_id JOIN sz sb ON b = sb.doc_id
          |         WHERE nc::DOUBLE / (sa.n + sb.n - nc) >= 0.5),
-         |sig AS (SELECT doc_id, $sigExprs FROM sh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |${sigCte("sh", "g")},
+         |${bandsCte("bands")},
          |hot AS (SELECT band, bucket FROM bands
          |        GROUP BY band, bucket HAVING COUNT(*) > 128),
          |kept AS (SELECT bands.* FROM bands ANTI JOIN hot USING (band, bucket)),
@@ -6330,19 +5994,7 @@ object Extensions {
          |  COUNT(*) AS n
          |FROM s GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
     "e69_source_overlap" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -6503,23 +6155,11 @@ object Extensions {
         |FROM ok LEFT JOIN cov USING (doc_id)
         |ORDER BY dup_frac DESC, doc_id LIMIT 25""".stripMargin,
     "e45_split_leakage" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       def splitOf(c: String) =
         s"""CASE WHEN ${String.format(tokenHashSql, s"CAST($c AS VARCHAR)")} % 100 < 80 THEN 'train'
            |     WHEN ${String.format(tokenHashSql, s"CAST($c AS VARCHAR)")} % 100 < 90 THEN 'val'
            |     ELSE 'test' END""".stripMargin
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -6598,19 +6238,7 @@ object Extensions {
         |FROM dev JOIN mad USING (lang)
         |GROUP BY dev.lang, med, mad ORDER BY dev.lang""".stripMargin,
     "e50_tfidf_cosine" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
@@ -6635,20 +6263,8 @@ object Extensions {
          |ORDER BY cos_tfidf DESC, d1, d2 LIMIT 25""".stripMargin
     },
     "e49_dedup_survivorship" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH RECURSIVE
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -6746,10 +6362,6 @@ object Extensions {
     "e55_jaccard_prefix" -> denseJaccardSql
       .replace(">= 0.1", ">= 0.5").replace("doc_id % 5", "doc_id % 2"),
     "e56_pagerank" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       val iters = (1 to 5).map { k =>
         val prev = if (k == 1) "pr0" else s"it${k - 1}"
         s"""it$k AS (SELECT d.a AS node,
@@ -6760,15 +6372,7 @@ object Extensions {
            |    FROM und u JOIN deg dd ON dd.a = u.a JOIN $prev p ON p.node = u.a
            |    GROUP BY u.b) s ON s.b = d.a)""".stripMargin
       }.mkString(",\n")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |edges AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -6783,19 +6387,7 @@ object Extensions {
          |FROM it5 ORDER BY doc_id""".stripMargin
     },
     "e57_triangle_count" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
-      s"""WITH tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |            FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+      s"""WITH $sampledBandsCte,
          |e AS (
          |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |  FROM bands x JOIN bands y
@@ -6820,10 +6412,6 @@ object Extensions {
          |ORDER BY d.doc_id""".stripMargin
     },
     "e58_lsh_recall" -> {
-      val hs = String.format(tokenHashSql, "t")
-      val sigExprs = A.zip(B).zipWithIndex.map { case ((a, b), i) =>
-        s"MIN((h * $a + $b) % $P) AS sig$i"
-      }.mkString(", ")
       s"""WITH sets AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk
          |              FROM documents WHERE doc_id % 10 = 0),
          |truth AS (
@@ -6831,15 +6419,7 @@ object Extensions {
          |  FROM sets a JOIN sets b ON a.doc_id < b.doc_id
          |  WHERE len(list_intersect(a.tk, b.tk))::DOUBLE
          |    / (len(a.tk) + len(b.tk) - len(list_intersect(a.tk, b.tk))) >= 0.1),
-         |tk AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |hh AS (SELECT doc_id, $hs AS h FROM tk),
-         |sig AS (SELECT doc_id, $sigExprs FROM hh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, sig0 * $P + sig1 AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, sig2 * $P + sig3 FROM sig
-         |  UNION ALL SELECT doc_id, 2, sig4 * $P + sig5 FROM sig
-         |  UNION ALL SELECT doc_id, 3, sig6 * $P + sig7 FROM sig),
+         |$sampledBandsCte,
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y

@@ -20,9 +20,9 @@ import java.nio.ByteBuffer
   * the shuffle carries (64 bytes/doc, partial-aggregatable and mergeable
   * across executors like any Spark aggregate).
   *
-  * Same hash family as Extensions (a_i·H(t)+b_i mod 2^31−1 over the
-  * md5-prefix token hash), so results are identical to e02 and to the DuckDB
-  * oracle.
+  * Same hash family as [[graft.SetSimilarity.signatures]] (a_i·H(t)+b_i
+  * mod 2^31−1 over the md5-prefix token hash, constants defined there), so
+  * results are identical to e02 and to the DuckDB oracle.
   */
 case class MinHashAgg(
     child: Expression,
@@ -30,7 +30,8 @@ case class MinHashAgg(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
 
-  import MinHashAgg.{A, B, K, P}
+  import MinHashAgg.K
+  import graft.SetSimilarity.{A, B, P}
 
   override def createAggregationBuffer(): Array[Long] =
     Array.fill(K)(Long.MaxValue)
@@ -82,10 +83,7 @@ case class MinHashAgg(
 }
 
 object MinHashAgg {
-  val K = 8
-  val P = 2147483647L
-  val A: Array[Long] = Array(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
-  val B: Array[Long] = Array(3L, 5L, 59L, 61L, 67L, 71L, 73L, 79L)
+  val K: Int = graft.SetSimilarity.A.length
 
   private val FN = "graft_minhash"
 

@@ -194,8 +194,8 @@ final class LshIndex(root: String, nBp: Int = 16) extends MaintainableStore {
     val (r, b) = bandingOf(st)
     // persisted: the signatures feed five actions (bp probe, both sides of
     // the pair join, the postings write, the sigs write)
-    val sig = graft.Extensions.minhashSigs(docs).persist()
-    val bands = graft.Extensions.bandsFromSigs(sig, r, b).withColumn("bp", bpCol)
+    val sig = graft.SetSimilarity.minhashSigs(docs).persist()
+    val bands = graft.SetSimilarity.bandsFromSigs(sig, r, b).withColumn("bp", bpCol)
     try {
       // bounded read: only the stored bp partitions this batch touches
       val touchedBp = bands.select(col("bp")).distinct()
@@ -260,8 +260,8 @@ final class LshIndex(root: String, nBp: Int = 16) extends MaintainableStore {
     // the same discipline as the ingest's seen-store probe
     val excl: Column = excludeBatchId
       .map(id => col("batch_id") =!= id).getOrElse(lit(true))
-    val sig = graft.Extensions.minhashSigs(docs).persist()
-    val bands = graft.Extensions.bandsFromSigs(sig, r, b).withColumn("bp", bpCol)
+    val sig = graft.SetSimilarity.minhashSigs(docs).persist()
+    val bands = graft.SetSimilarity.bandsFromSigs(sig, r, b).withColumn("bp", bpCol)
     try {
       val touchedBp = bands.select(col("bp")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
@@ -327,7 +327,7 @@ final class LshIndex(root: String, nBp: Int = 16) extends MaintainableStore {
       log.assertNoLiveVacuum("LshIndex.reband")
       val sig = readDir(spark, "sigs", sigsDir, sigsReadSchema)
         .filter(idFilter(st.auxIds)).drop("batch_id").distinct()
-      val bands = graft.Extensions.bandsFromSigs(sig, r, b)
+      val bands = graft.SetSimilarity.bandsFromSigs(sig, r, b)
         .withColumn("bp", bpCol).persist()
       val consol = freshNegativeId(st)
       try {

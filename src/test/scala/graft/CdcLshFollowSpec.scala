@@ -56,7 +56,7 @@ class CdcLshFollowSpec extends SparkSpecBase {
       q.processAllAvailable()
 
       val live = rep.live(spark).select(col("doc_id"), col("text"))
-      val bands = Extensions.bandsFromSigs(Extensions.minhashSigs(live), 2, 4)
+      val bands = SetSimilarity.bandsFromSigs(SetSimilarity.minhashSigs(live), 2, 4)
       val want = bands.as("x").join(bands.as("y"),
           col("x.band") === col("y.band") &&
             col("x.bucket") === col("y.bucket") &&

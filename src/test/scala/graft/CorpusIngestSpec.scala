@@ -102,7 +102,7 @@ class CorpusIngestSpec extends SparkSpecBase {
     ing.ingestBatch(fixture.filter(col("doc_id") < 25), 0L)
     ing.ingestBatch(fixture.filter(col("doc_id") >= 25), 1L)
     val accepted = ing.corpus(spark).select(col("doc_id"), col("text"))
-    val bands = Extensions.minhashBands(accepted)
+    val bands = SetSimilarity.minhashBands(accepted)
     val oneShot = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))

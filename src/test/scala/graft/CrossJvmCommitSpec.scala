@@ -98,7 +98,7 @@ class CrossJvmCommitSpec extends SparkSpecBase {
     val all = docs.filter(col("doc_id") < 90)
     val got = reopened.pairs(spark).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val bands = Extensions.bandsFromSigs(Extensions.minhashSigs(all), 2, 4)
+    val bands = SetSimilarity.bandsFromSigs(SetSimilarity.minhashSigs(all), 2, 4)
     val want = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))

@@ -50,7 +50,7 @@ class IndexStoreStressSpec extends SparkSpecBase {
       .filter(col("doc_id") < 60).select(col("doc_id"), col("text"))
 
   private def oneShotAt(d: DataFrame, r: Int, b: Int): Set[(Long, Long, Long)] = {
-    val bands = Extensions.bandsFromSigs(Extensions.minhashSigs(d), r, b)
+    val bands = SetSimilarity.bandsFromSigs(SetSimilarity.minhashSigs(d), r, b)
     bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))

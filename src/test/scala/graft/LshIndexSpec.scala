@@ -14,7 +14,7 @@ class LshIndexSpec extends SparkSpecBase {
 
   /** One-shot twin: candidate pairs from banding the whole corpus. */
   private def oneShot(d: DataFrame): Set[(Long, Long, Long)] = {
-    val bands = Extensions.minhashBands(d)
+    val bands = SetSimilarity.minhashBands(d)
     bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -74,7 +74,7 @@ class LshIndexSpec extends SparkSpecBase {
     idx.addBatch(docs.filter(col("doc_id") < 40), 0L)
     // a single doc touches ≤ 4 buckets → ≤ 4 of the 16 bp partitions
     val one = docs.filter(col("doc_id") === 45)
-    val touched = Extensions.minhashBands(one)
+    val touched = SetSimilarity.minhashBands(one)
       .select(pmod(xxhash64(col("bucket")), lit(16L)).cast("int").as("bp"))
       .distinct().collect().map(_.getInt(0)).toSet
     val pruned = idx.postings(spark)
@@ -126,7 +126,7 @@ class LshIndexSpec extends SparkSpecBase {
 
   /** One-shot twin at an arbitrary banding. */
   private def oneShotAt(d: DataFrame, r: Int, b: Int): Set[(Long, Long, Long)] = {
-    val bands = Extensions.bandsFromSigs(Extensions.minhashSigs(d), r, b)
+    val bands = SetSimilarity.bandsFromSigs(SetSimilarity.minhashSigs(d), r, b)
     bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))

@@ -42,7 +42,7 @@ class NearDupIngestSpec extends SparkSpecBase {
   // the spec's ground truth for the fixture agreements, derived through
   // the ENGINE's own signature pipeline (not hand-copied constants)
   private def agreement(t1: String, t2: String): Int = {
-    val s = Extensions.minhashSigs(df(doc(900L, t1), doc(901L, t2)))
+    val s = SetSimilarity.minhashSigs(df(doc(900L, t1), doc(901L, t2)))
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
     s(900L).zip(s(901L)).count { case (x, y) => x == y }
   }

@@ -134,6 +134,21 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("Scan ExistingRDD"), p.take(2000))
   }
 
+  test("e04c blocked jaccard: the sealed overlap runs once, in a Project above the pair join") {
+    // sf0.01: a timed near-dup kernel of the analyst benchmark. Unsealed,
+    // the optimizer folds the jaccard filter into the pair join's condition
+    // and spells the intersect there (twice, before the cheap prefilters)
+    val sf001 = new java.io.File(sfDir).getParent + "/sf0.01"
+    val p = finalPlan(SparkEntry.queries("e04c_jaccard_blocked")(spark, sf001))
+    val lines = p.linesIterator.toSeq
+    val at = lines.indexWhere(_.contains("array_intersect("))
+    assert("array_intersect\\(".r.findAllIn(p).length === 1, p.take(4000))
+    assert(lines(at).contains("Project ["), lines(at))
+    assert(!lines.exists(l => l.contains("Join") && l.contains("array_intersect(")), p.take(4000))
+    val join = lines.indexWhere(_.contains("Join"))
+    assert(join > at, s"the overlap Project must sit above the pair join:\n${p.take(4000)}")
+  }
+
   test("c55 basket lift: support joins broadcast, top-25 is a heap not a sort") {
     val p = finalPlan(q("c55_basket_lift"))
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))

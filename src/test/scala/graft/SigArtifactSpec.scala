@@ -25,7 +25,7 @@ class SigArtifactSpec extends SparkSpecBase {
   }
 
   test("signature artifact equals the from-scratch sig table; re-read is a scan") {
-    val fresh = rows(Extensions.minhashSigs(
+    val fresh = rows(SetSimilarity.minhashSigs(
       Tables.load(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))))
@@ -35,7 +35,7 @@ class SigArtifactSpec extends SparkSpecBase {
   }
 
   test("candidate-pair artifact equals the from-scratch banding self-join") {
-    val bands = Extensions.minhashBands(
+    val bands = SetSimilarity.minhashBands(
       Tables.load(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text")))

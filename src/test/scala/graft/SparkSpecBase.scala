@@ -30,12 +30,10 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     spark.listenerManager.register(l)
     try {
       body
-      // listener events are async: poll until the count is stable
-      var prev = -1; var cur = actions.get(); var spins = 0
-      while (cur != prev && spins < 50) {
-        prev = cur; Thread.sleep(100); cur = actions.get(); spins += 1
-      }
-      cur
+      // every action posts its end event before it returns: once the bus
+      // has delivered what was posted, the count is final
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
+      actions.get()
     } finally spark.listenerManager.unregister(l)
   }
 

@@ -27,7 +27,7 @@ class StoreProtocolSpec extends SparkSpecBase {
     Tables.load(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding"))
 
   private def oneShotAt(d: DataFrame, r: Int, b: Int): Set[(Long, Long, Long)] = {
-    val bands = Extensions.bandsFromSigs(Extensions.minhashSigs(d), r, b)
+    val bands = SetSimilarity.bandsFromSigs(SetSimilarity.minhashSigs(d), r, b)
     bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -52,8 +52,8 @@ class StoreProtocolSpec extends SparkSpecBase {
     // simulate reband dying AFTER its consolidated rewrite, BEFORE its
     // commit: exactly the files reband writes, at a fresh negative id, with
     // no log entry
-    val sig = Extensions.minhashSigs(docs).drop("batch_id").distinct()
-    val bands = Extensions.bandsFromSigs(sig, 4, 2)
+    val sig = SetSimilarity.minhashSigs(docs).drop("batch_id").distinct()
+    val bands = SetSimilarity.bandsFromSigs(sig, 4, 2)
       .withColumn("bp", pmod(xxhash64(col("bucket")), lit(16L)).cast("int"))
     bands.write.mode("overwrite").partitionBy("bp")
       .parquet(s"$root/postings/batch_id=-1")
@@ -82,8 +82,8 @@ class StoreProtocolSpec extends SparkSpecBase {
     val before = emitted(idx).sorted
     // batch 1's data fully written, no log entry (crash in the commit window)
     val d1 = docs.filter(col("doc_id") >= 30)
-    val sig = Extensions.minhashSigs(d1)
-    val bands = Extensions.bandsFromSigs(sig, 2, 4)
+    val sig = SetSimilarity.minhashSigs(d1)
+    val bands = SetSimilarity.bandsFromSigs(sig, 2, 4)
       .withColumn("bp", pmod(xxhash64(col("bucket")), lit(16L)).cast("int"))
     bands.write.mode("overwrite").partitionBy("bp")
       .parquet(s"$root/postings/batch_id=1")
